@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from jsonschema_spark.json_values import json_hash_key
+
 __all__ = ["schema_compat"]
 
 _TYPE_ORDER = ("null", "boolean", "integer", "number", "string", "array", "object")
@@ -108,24 +110,19 @@ def schema_compat(old: Any, new: Any, path: str = "") -> list[dict]:
         )
 
     # --- enum / const ---
-    # JSON Schema distinguishes booleans from numbers, but Python equality
-    # conflates them (True == 1, 1.0 == 1) — key every member by
-    # (is-bool, value) so an enum narrowed from [1] to [true] still reports
-    # (round-4 advice)
-    def _jkey(v):
-        return (isinstance(v, bool), v) if not isinstance(v, (list, dict)) else (False, repr(v))
-
+    # members compare by JSON equality: booleans stay distinct from numbers
+    # ([1] -> [true] narrows), 1 == 1.0, and object key order is irrelevant
     if "enum" in new:
         oe = old.get("enum")
         if oe is None:
             out.append(_find(path, "enum_added", None, new["enum"], True))
         else:
-            new_keys = {_jkey(v) for v in new["enum"]}
-            removed = [v for v in oe if _jkey(v) not in new_keys]
+            new_keys = {json_hash_key(v) for v in new["enum"]}
+            removed = [v for v in oe if json_hash_key(v) not in new_keys]
             if removed:
                 out.append(_find(path, "enum_narrowed", oe, new["enum"], True))
     if "const" in new and (
-        "const" not in old or _jkey(old["const"]) != _jkey(new["const"])
+        "const" not in old or json_hash_key(old["const"]) != json_hash_key(new["const"])
     ):
         out.append(
             _find(path, "const_changed", old.get("const"), new["const"], True)

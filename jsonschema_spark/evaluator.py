@@ -21,6 +21,7 @@ from typing import Any
 from jsonschema_spark import formats as _formats
 from jsonschema_spark.errors import render_message
 from jsonschema_spark.json_values import (
+    fmt_num,
     json_equal,
     json_hash_key,
     json_type,
@@ -45,20 +46,10 @@ def _kptr(kp: str, *tokens: str | int) -> str:
     return kp
 
 
-def _fmt_num(v: Any) -> str:
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, Fraction):
-        if v.denominator == 1:
-            return str(v.numerator)
-        return str(float(v))
-    return str(v)
-
-
 def _received(v: Any) -> str:
     t = json_type(v)
     if t in ("string", "integer", "number", "boolean"):
-        return _fmt_num(v) if t != "string" else v
+        return fmt_num(v) if t != "string" else v
     return t
 
 
@@ -344,7 +335,7 @@ class Evaluator:
                 res.violations.extend(sub.violations)
                 res.fail(path, "$ref", "ref_mismatch")
         if "$dynamicRef" in s and isinstance(s["$dynamicRef"], str):
-            target = self._resolve_dynamic(s["$dynamicRef"], s, ctx)
+            target = ctx.registry.resolve_dynamic(s["$dynamicRef"], s, ctx.scope_bases)
             sub = self._eval(target, v, path, ctx, _kptr(res.kp, "$dynamicRef"))
             if sub.valid:
                 res.merge_annotations(sub)
@@ -594,7 +585,7 @@ class Evaluator:
                     "enum",
                     "value_not_in_enum",
                     received=_received(v),
-                    expected=", ".join(_fmt_num(x) if not isinstance(x, str) else x for x in s["enum"]),
+                    expected=", ".join(fmt_num(x) if not isinstance(x, str) else x for x in s["enum"]),
                 )
         if "const" in s:
             if not json_equal(v, s["const"]):
@@ -606,31 +597,31 @@ class Evaluator:
         if _is_number(v):
             f = _as_fraction(v)
             if "minimum" in s and _is_number(s["minimum"]) and f < _as_fraction(s["minimum"]):
-                res.fail(path, "minimum", "value_below_minimum", value=_fmt_num(v), minimum=_fmt_num(s["minimum"]))
+                res.fail(path, "minimum", "value_below_minimum", value=fmt_num(v), minimum=fmt_num(s["minimum"]))
             if "maximum" in s and _is_number(s["maximum"]) and f > _as_fraction(s["maximum"]):
-                res.fail(path, "maximum", "value_above_maximum", value=_fmt_num(v), maximum=_fmt_num(s["maximum"]))
+                res.fail(path, "maximum", "value_above_maximum", value=fmt_num(v), maximum=fmt_num(s["maximum"]))
             if "exclusiveMinimum" in s and _is_number(s["exclusiveMinimum"]) and f <= _as_fraction(s["exclusiveMinimum"]):
                 res.fail(
                     path,
                     "exclusiveMinimum",
                     "exclusive_minimum_mismatch",
-                    value=_fmt_num(v),
-                    exclusive_minimum=_fmt_num(s["exclusiveMinimum"]),
+                    value=fmt_num(v),
+                    exclusive_minimum=fmt_num(s["exclusiveMinimum"]),
                 )
             if "exclusiveMaximum" in s and _is_number(s["exclusiveMaximum"]) and f >= _as_fraction(s["exclusiveMaximum"]):
                 res.fail(
                     path,
                     "exclusiveMaximum",
                     "exclusive_maximum_mismatch",
-                    value=_fmt_num(v),
-                    exclusive_maximum=_fmt_num(s["exclusiveMaximum"]),
+                    value=fmt_num(v),
+                    exclusive_maximum=fmt_num(s["exclusiveMaximum"]),
                 )
             if "multipleOf" in s and _is_number(s["multipleOf"]):
                 div = _as_fraction(s["multipleOf"])
                 if div <= 0:
-                    res.fail(path, "multipleOf", "invalid_multiple_of", multiple_of=_fmt_num(s["multipleOf"]))
+                    res.fail(path, "multipleOf", "invalid_multiple_of", multiple_of=fmt_num(s["multipleOf"]))
                 elif (f / div).denominator != 1:
-                    res.fail(path, "multipleOf", "not_multiple_of", multiple_of=_fmt_num(s["multipleOf"]))
+                    res.fail(path, "multipleOf", "not_multiple_of", multiple_of=fmt_num(s["multipleOf"]))
 
         if isinstance(v, str):
             min_len = _int_kw(s.get("minLength"))
@@ -831,15 +822,3 @@ class Evaluator:
                     "property_names_mismatch",
                     properties=", ".join(sorted(bad_props)),
                 )
-
-    # -------------------------------------------------------------- dynamicRef
-
-    def _resolve_dynamic(self, ref: str, schema: dict, ctx: _Ctx) -> Any:
-        target, target_base = ctx.registry.resolve_ref(ref, schema, "")
-        frag = ref.split("#", 1)[1] if "#" in ref else ""
-        if frag and not frag.startswith("/"):
-            if isinstance(target, dict) and target.get("$dynamicAnchor") == frag:
-                hit = ctx.registry.find_dynamic(frag, ctx.scope_bases)
-                if hit is not None:
-                    return hit
-        return target

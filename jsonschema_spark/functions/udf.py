@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.plans.columns import VIOLATION_SCHEMA_DDL
+from jsonschema_spark.plans.core import VIOLATION_SCHEMA_DDL
 
 _LOG = logging.getLogger(__name__)
 
@@ -67,9 +67,12 @@ def validate_json_column(
     Fast path: when the schema falls in the variant-supported subset, the
     whole validation compiles to JVM variant expressions (try_parse_json +
     schema_of_variant + try_variant_get) — zero Python per row (north rule).
-    Residue (patternProperties / unevaluated* / $dynamicRef / exotic property
-    names) runs the Arrow-batched scalar-evaluator UDF; `valid` derives
-    JVM-side (size == 0) either way.
+    Residue (keywords outside the variant subset such as the content
+    vocabulary, exotic property names, propertyNames subschemas beyond
+    string predicates, unevaluated* beside a sibling $ref / $dynamicRef,
+    too-deep nesting)
+    runs the Arrow-batched scalar-evaluator UDF; `valid` derives JVM-side
+    (size == 0) either way.
     """
     if not isinstance(schema, str):
         from jsonschema_spark.plans.variant import (

@@ -26,6 +26,7 @@ __all__ = [
     "json_equal",
     "json_hash_key",
     "canonical_json",
+    "fmt_num",
 ]
 
 
@@ -176,3 +177,15 @@ def _canon(value: Any) -> Any:
 def canonical_json(value: Any) -> str:
     """Deterministic JSON rendering (sorted keys) for params/reporting."""
     return json.dumps(_canon(value), sort_keys=True, separators=(",", ":"), ensure_ascii=False)
+
+
+def fmt_num(v: Any) -> str:
+    """A number (or boolean) as violation params print it: integral values
+    without a fraction part, others as their float form."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, Fraction):
+        if v.denominator == 1:
+            return str(v.numerator)
+        return str(float(v))
+    return str(v)

@@ -18,170 +18,46 @@ skipped on NULL (JSON Schema applies assertions only to present values).
 Dynamic residue (patterns Java regex can't run, non-regex formats, dynamic
 JSON documents) is routed to the Arrow-batched evaluator UDF in
 ``jsonschema_spark.functions.udf`` — see SURVEY.md §4.2.
+
+The applicator layer (logical applicators, $ref / $dynamicRef, unevaluated*
+claims, summary rows, staging) is the planner core shared with the raw-JSON
+planner, ``plans.core``; this module holds the typed value model.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from decimal import Decimal
 from fractions import Fraction
 from typing import Any
-from itertools import count as _it_count
-
-_STAGE_IDS = _it_count()
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jsonschema_spark.formats import SPARK_REGEX_FORMATS
-from jsonschema_spark.registry import Registry
-
-__all__ = ["SparkPlanCompiler", "validate_dataframe", "VIOLATION_SCHEMA_DDL"]
-
-VIOLATION_SCHEMA_DDL = (
-    "array<struct<instance_path:string,keyword:string,code:string,params:map<string,string>>>"
+from jsonschema_spark.json_values import fmt_num
+from jsonschema_spark.plans.core import (
+    VIOLATION_SCHEMA_DDL,
+    PlanCompiler,
+    Val,
+    cond_violation,
+    dec_scale,
+    divisor_fraction,
+    double_multiple,
+    element_summary,
+    empty_violations,
+    escape_token,
+    joined_violation,
+    list_summary,
+    safe,
+    summary_violation,
 )
 
-_EMPTY_VIOLATIONS = f"CAST(array() AS {VIOLATION_SCHEMA_DDL})"
-
-_MAX_REF_DEPTH = 16
+__all__ = ["SparkPlanCompiler", "validate_dataframe", "VIOLATION_SCHEMA_DDL"]
 
 
 class PlanCompileError(ValueError):
     pass
-
-
-@dataclass
-class _Val:
-    """The value under validation: expression + static type + dynamic path."""
-
-    col: Column
-    dtype: T.DataType
-    path: Column  # string column: JSON-pointer of this value
-    in_lambda: bool = False  # True inside a HOF lambda (not stageable)
-
-
-@dataclass
-class _Node:
-    """Compiled subschema: validity predicate + violation constructor."""
-
-    valid: Column
-    violations: Column  # array<struct<...>>
-
-
-def _lit_path(s: str) -> Column:
-    return F.lit(s)
-
-
-def _escape_token(tok: str) -> str:
-    return tok.replace("~", "~0").replace("/", "~1")
-
-
-def _empty_violations() -> Column:
-    return F.expr(_EMPTY_VIOLATIONS)
-
-
-def _mk_violation(path: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> Column:
-    if params:
-        kv: list[Column] = []
-        for k, v in params.items():
-            kv.append(F.lit(k))
-            kv.append(v.cast("string"))
-        pmap = F.create_map(*kv)
-    else:
-        pmap = F.expr("CAST(map() AS map<string,string>)")
-    return F.struct(
-        path.cast("string").alias("instance_path"),
-        F.lit(keyword).alias("keyword"),
-        F.lit(code).alias("code"),
-        pmap.alias("params"),
-    )
-
-
-def _safe(cond: Column) -> Column:
-    """Collapse SQL three-valued logic: NULL condition means 'not violated'."""
-    return F.coalesce(cond, F.lit(False))
-
-
-def _cond_violation(cond: Column, *args: Any, **kwargs: Any) -> Column:
-    """array with the violation when cond, else empty array."""
-    return F.when(_safe(cond), F.array(_mk_violation(*args, **kwargs))).otherwise(_empty_violations())
-
-
-def _summary_violation(
-    conds_names: list[tuple[Column, Any]],
-    path: Column,
-    keyword: str,
-    code_single: str,
-    code_plural: str,
-    *,
-    param_single: str = "property",
-    param_plural: str = "properties",
-    sort_plural: bool = True,
-    dedupe_plural: bool = False,
-) -> Column:
-    """ONE summary row per applicator keyword, mirroring the scalar core's
-    singular/plural emission (evaluator.py `_eval_object`): code_single with
-    the first failing name when exactly one sub-check fails, code_plural with
-    the joined name list when several fail, nothing when none fail."""
-    if not conds_names:
-        return _empty_violations()
-    flags = [_safe(c) for c, _ in conds_names]
-    cnt = flags[0].cast("int")
-    for fl in flags[1:]:
-        cnt = cnt + fl.cast("int")
-    whens = [F.when(fl, F.lit(str(n))) for fl, (_, n) in zip(flags, conds_names)]
-    first = F.coalesce(*whens, F.lit("")) if len(whens) > 1 else F.coalesce(whens[0], F.lit(""))
-    bad = F.filter(F.array(*whens), lambda x: x.isNotNull())
-    if dedupe_plural:
-        bad = F.array_distinct(bad)
-    if sort_plural:
-        bad = F.array_sort(bad)
-    joined = F.array_join(bad, ", ")
-    # cnt == 0 FIRST: CaseWhen evaluates conditions in order and interpreted
-    # HOF bodies have no CSE, so on the common (all-valid) path the flag sum
-    # evaluates ONCE instead of twice (cnt==1 then cnt>1) — measurable on
-    # per-element object schemas where every flag re-runs its predicate
-    return (
-        F.when(cnt == 0, _empty_violations())
-        .when(cnt == 1, F.array(_mk_violation(path, keyword, code_single, {param_single: first})))
-        .otherwise(F.array(_mk_violation(path, keyword, code_plural, {param_plural: joined})))
-    )
-
-
-def _dynamic_index_summary(
-    present: Column, bad_idx: Column, path: Column,
-    keyword: str, code_single: str, code_plural: str,
-) -> Column:
-    """Runtime singular/plural summary over an array of failing element
-    indices (items / unevaluatedItems — scalar core evaluator.py:519-535)."""
-    nbad = F.size(bad_idx)
-    return (
-        F.when(
-            _safe(present & (nbad == 1)),
-            F.array(_mk_violation(path, keyword, code_single,
-                                  {"index": F.element_at(bad_idx, 1)})),
-        )
-        .when(
-            _safe(present & (nbad > 1)),
-            F.array(_mk_violation(
-                path, keyword, code_plural,
-                {"indexs": F.array_join(
-                    F.transform(bad_idx, lambda x: x.cast("string")), ", ")},
-            )),
-        )
-        .otherwise(_empty_violations())
-    )
-
-
-def _concat_violations(parts: list[Column]) -> Column:
-    parts = [p for p in parts if p is not None]
-    if not parts:
-        return _empty_violations()
-    if len(parts) == 1:
-        return parts[0]
-    return F.concat(*parts)
 
 
 def _is_number_type(dt: T.DataType) -> bool:
@@ -192,25 +68,6 @@ def _is_integer_type(dt: T.DataType) -> bool:
     return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
 
 
-def _dec_scale(f: Fraction) -> int | None:
-    """Smallest s with f*10^s integral, or None if f is non-terminating
-    (denominator has a prime factor other than 2/5 — can't occur for
-    divisors parsed from JSON text, which are terminating by construction)."""
-    den = f.denominator
-    s = 0
-    for p in (2, 5):
-        while den % p == 0:
-            den //= p
-    if den != 1:
-        return None
-    den = f.denominator
-    while f.denominator > 1 and (f * 10**s).denominator > 1:
-        s += 1
-        if s > 38:
-            return None
-    return s
-
-
 def _decimal_multiple_plan(fdiv: Fraction, dt: T.DecimalType) -> str | None:
     """Common decimal type for an EXACT `col % divisor` remainder, or None
     when the divisor never terminates or the scale bump would overflow
@@ -218,7 +75,7 @@ def _decimal_multiple_plan(fdiv: Fraction, dt: T.DecimalType) -> str | None:
     max(column scale, divisor scale) so neither operand is rounded; the
     precision bump is bounded by the scale delta plus the divisor's integer
     digits."""
-    sd = _dec_scale(fdiv)
+    sd = dec_scale(fdiv)
     if sd is None:
         return None
     t_scale = max(dt.scale, sd)
@@ -234,12 +91,6 @@ def _num_lit(v: Any) -> Column:
             return F.lit(int(v))
         return F.lit(float(v))
     return F.lit(v)
-
-
-def _num_str(v: Any) -> str:
-    if isinstance(v, Fraction):
-        return str(int(v)) if v.denominator == 1 else str(float(v))
-    return str(v)
 
 
 def _spark_type_name(dt: T.DataType) -> str:
@@ -263,45 +114,30 @@ def _spark_type_name(dt: T.DataType) -> str:
     return "unknown"
 
 
-class SparkPlanCompiler:
+class SparkPlanCompiler(PlanCompiler):
     """Compiles a JSON Schema against a typed Spark schema (driver-side, once).
 
-    Reference analogue: compiler.go Compile → schema tree; here the "physical
-    plan" is a Column expression tree Catalyst owns. ``$ref`` is inlined at
-    plan time (reference resolves refs at compile: ref.go resolveRef).
+    The value model is the DataFrame's static type: a keyword that cannot
+    apply to a column's type compiles to nothing, and name-keyed applicators
+    resolve against the StructType's field set at plan time. ``$ref`` /
+    ``$dynamicRef`` unroll statically; recursion terminates when the fixed
+    StructType runs out of matching fields, else ``MAX_DEPTH`` raises
+    (SURVEY §4.2.5-6, reference validate.go:155-177).
     """
+
+    error = PlanCompileError
+    MAX_DEPTH = 16  # depth counts $ref / $dynamicRef hops
+    depth_error = (
+        f"$ref/$dynamicRef nesting exceeds {MAX_DEPTH}: the recursion "
+        "does not ground out in this DataFrame's static type (genuinely "
+        "unbounded — route to the scalar/UDF path)"
+    )
 
     def __init__(
         self, schema: Any, *, assert_format: bool = True, assert_content: bool = False
     ) -> None:
-        from jsonschema_spark.dialects import normalize_schema
-
-        schema = normalize_schema(schema)  # accept legacy dialects via $schema
-        self.schema = schema
-        self.assert_format = assert_format
+        super().__init__(schema, assert_format=assert_format)
         self.assert_content = assert_content
-        self.registry = Registry()
-        self.registry.register(schema, "")
-        self._stages: list[tuple[str, Column]] | None = None
-        self._scope: list[str] = []  # static dynamic-scope base-URI stack
-        self._audit(schema)
-
-    @staticmethod
-    def _audit(schema: Any, depth: int = 0) -> None:
-        """Unknown keywords are annotations per 2020-12 and stay ignored.
-        $dynamicRef is handled by bounded static unrolling (the dynamic scope
-        at every compile point is statically known because the whole plan is
-        inlined; recursion terminates when the fixed StructType runs out of
-        matching fields, else _MAX_REF_DEPTH raises — SURVEY §4.2.5-6,
-        reference validate.go:155-177)."""
-        if depth > 64 or not isinstance(schema, dict):
-            return
-        for v in schema.values():
-            if isinstance(v, dict):
-                SparkPlanCompiler._audit(v, depth + 1)
-            elif isinstance(v, list):
-                for item in v:
-                    SparkPlanCompiler._audit(item, depth + 1)
 
     # -------------------------------------------------------------- public API
 
@@ -311,53 +147,12 @@ class SparkPlanCompiler:
         root: Column | None = None,
         stages: list[tuple[str, Column]] | None = None,
     ) -> Column:
-        """Build the violations array column for rows of ``df_schema``.
-
-        When ``stages`` is passed, expensive multiply-referenced
-        subexpressions (per-element transforms for items summaries) are
-        appended to it as (name, Column) pairs the caller must withColumn
-        BEFORE the returned column (their own projection keeps CollapseProject
-        from re-inlining them — Catalyst does not CSE non-cheap exprs inside
-        one projection, measured 3.4x on variant parse). Without ``stages``
-        the plan is still correct, just recomputes those subtrees."""
+        """Build the violations array column for rows of ``df_schema``;
+        ``stages`` as in :meth:`PlanCompiler._compile_root` (per-element
+        transforms for items summaries, per-property violations)."""
         if root is None:
             root = F.struct(*[F.col(f.name).alias(f.name) for f in df_schema.fields])
-        self._stages = stages
-        self._scope = []
-        try:
-            val = _Val(col=root, dtype=df_schema, path=_lit_path(""))
-            node = self._compile(self.schema, val, 0)
-        finally:
-            self._stages = None
-        return node.violations
-
-    def _maybe_stage(self, col: Column, val: "_Val") -> Column:
-        if self._stages is None or val.in_lambda:
-            return col
-        # process-global counter — see plans/variant.py: names must be unique
-        # across compiler instances sharing one stages list
-        name = f"__jss_stage_{next(_STAGE_IDS)}"
-        self._stages.append((name, col))
-        return F.col(name)
-
-    @staticmethod
-    def attach_stages(df: DataFrame, stages: list[tuple[str, Column]]) -> DataFrame:
-        """Attach staged columns in dependency LAYERS.
-
-        A stage expression may reference earlier stage names, so they cannot
-        all go in one projection — but one ``withColumns`` per layer (flushed
-        only when a stage references a name in the current batch) keeps plan
-        re-analysis linear in layer count. Per-stage ``withColumn`` re-analyzes
-        the whole accumulated plan each time — measured ~10s of driver time
-        on a 24-stage recursive variant unroll. The substring dependency check
-        is conservative (a false positive only splits a layer)."""
-        batch: dict[str, Column] = {}
-        for name, col in stages:
-            if batch and any(n in str(col) for n in batch):
-                df = df.withColumns(batch)
-                batch = {}
-            batch[name] = col
-        return df.withColumns(batch) if batch else df
+        return self._compile_root(Val(col=root, dtype=df_schema, path=F.lit("")), stages).violations
 
     def apply(
         self,
@@ -377,67 +172,17 @@ class SparkPlanCompiler:
 
     # ---------------------------------------------------------------- internal
 
-    def _compile(self, schema: Any, val: _Val, depth: int) -> _Node:
-        if schema is True or schema == {}:
-            return _Node(valid=F.lit(True), violations=_empty_violations())
-        if schema is False:
-            return _Node(
-                valid=F.lit(False),
-                violations=_cond_violation(F.lit(True), val.path, "schema", "false_schema_mismatch"),
-            )
-        if not isinstance(schema, dict):
-            raise PlanCompileError(f"schema must be dict/bool, got {type(schema)}")
-        if depth > _MAX_REF_DEPTH:
-            raise PlanCompileError(
-                f"$ref/$dynamicRef nesting exceeds {_MAX_REF_DEPTH}: the recursion "
-                "does not ground out in this DataFrame's static type (genuinely "
-                "unbounded — route to the scalar/UDF path)"
-            )
-        # static dynamic-scope tracking: because the whole plan inlines, the
-        # dynamic scope at each compile point is exactly the chain of $id
-        # resources entered so far (mirrors evaluator.py _eval scope stack)
-        base = self.registry.base_of(schema)
-        pushed = False
-        if not self._scope or self._scope[-1] != base:
-            self._scope.append(base)
-            pushed = True
-        try:
-            return self._compile_dict(schema, val, depth)
-        finally:
-            if pushed:
-                self._scope.pop()
+    def _has(self, val: Val, name: str) -> Column | None:
+        if isinstance(val.dtype, T.StructType) and name in val.dtype.fieldNames():
+            return val.col[name].isNotNull()
+        return None
 
-    def _compile_dict(self, schema: dict, val: _Val, depth: int) -> _Node:
-        parts: list[Column] = []
-        valids: list[Column] = []
-        present = val.col.isNotNull()
-
+    def _compile_value(self, schema: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
         def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
             """cond applies only when the value is present."""
-            cond = _safe(present & cond_violated)
-            parts.append(_cond_violation(cond, val.path, keyword, code, params))
+            cond = safe(present & cond_violated)
+            parts.append(cond_violation(cond, val.path, keyword, code, params))
             valids.append(~cond)
-
-        if "$ref" in schema and isinstance(schema["$ref"], str):
-            target, _ = self.registry.resolve_ref(schema["$ref"], schema, "")
-            sub = self._compile(target, val, depth + 1)
-            parts.append(sub.violations)
-            # scalar core adds a ref_mismatch summary on top of the target's
-            # own violations (evaluator.py:235)
-            parts.append(_cond_violation(_safe(~sub.valid), val.path, "$ref", "ref_mismatch"))
-            valids.append(sub.valid)
-
-        if "$dynamicRef" in schema and isinstance(schema["$dynamicRef"], str):
-            # bounded static unrolling: resolve through the statically-known
-            # scope chain; recursion grounds out when the fixed StructType
-            # runs out of matching fields (reference: validate.go:684-765)
-            target = self._resolve_dynamic_static(schema["$dynamicRef"], schema)
-            sub = self._compile(target, val, depth + 1)
-            parts.append(sub.violations)
-            parts.append(
-                _cond_violation(_safe(~sub.valid), val.path, "$dynamicRef", "dynamic_ref_mismatch")
-            )
-            valids.append(sub.valid)
 
         self._compile_assertions(schema, val, add, present)
 
@@ -456,35 +201,9 @@ class SparkPlanCompiler:
         if isinstance(val.dtype, T.MapType):
             self._compile_map(schema, val, parts, valids, present, depth)
 
-        # ---- logical applicators -----------------------------------------
-        self._compile_logical(schema, val, parts, valids, present, depth)
-
-        if not parts:
-            return _Node(valid=F.lit(True), violations=_empty_violations())
-        valid = F.lit(True)
-        for c in valids:
-            valid = valid & c
-        return _Node(valid=valid, violations=_concat_violations(parts))
-
-    def _resolve_dynamic_static(self, ref: str, schema: dict) -> Any:
-        """$dynamicRef target under the STATIC scope chain (same algorithm as
-        evaluator.py _resolve_dynamic: bookended plain-name fragments search
-        the scope outermost-first; everything else behaves like $ref)."""
-        try:
-            target, _ = self.registry.resolve_ref(ref, schema, "")
-        except KeyError as exc:
-            raise PlanCompileError(f"unresolvable $dynamicRef: {ref!r}") from exc
-        frag = ref.split("#", 1)[1] if "#" in ref else ""
-        if frag and not frag.startswith("/"):
-            if isinstance(target, dict) and target.get("$dynamicAnchor") == frag:
-                hit = self.registry.find_dynamic(frag, self._scope)
-                if hit is not None:
-                    return hit
-        return target
-
     # ---------------------------------------------------------------- content
 
-    def _compile_content(self, s: dict, val: _Val, add, parts, valids, present: Column) -> None:
+    def _compile_content(self, s: dict, val: Val, add, parts, valids, present: Column) -> None:
         """Content vocabulary as assertions, lowered JVM-side for the
         built-in base64 + application/json handlers (try_to_binary /
         try_parse_json return NULL on malformed input); contentSchema runs
@@ -525,17 +244,17 @@ class SparkPlanCompiler:
                 ),
                 val,
             )
-            ok = _safe(parsed.isNotNull())
-            parts.append(F.when(ok, sub_v).otherwise(_empty_violations()))
-            mismatch = _safe(ok & (F.size(sub_v) > 0))
+            ok = safe(parsed.isNotNull())
+            parts.append(F.when(ok, sub_v).otherwise(empty_violations()))
+            mismatch = safe(ok & (F.size(sub_v) > 0))
             parts.append(
-                _cond_violation(mismatch, val.path, "contentSchema", "content_schema_mismatch")
+                cond_violation(mismatch, val.path, "contentSchema", "content_schema_mismatch")
             )
             valids.append(~mismatch)
 
     # -------------------------------------------------------------- assertions
 
-    def _compile_assertions(self, s: dict, val: _Val, add, present: Column) -> None:
+    def _compile_assertions(self, s: dict, val: Val, add, present: Column) -> None:
         dt = val.dtype
 
         if "type" in s:
@@ -570,7 +289,7 @@ class SparkPlanCompiler:
                     "value_not_in_enum",
                     {
                         "received": val.col.cast("string"),
-                        "expected": F.lit(", ".join(_num_str(a) if not isinstance(a, str) else a for a in allowed)),
+                        "expected": F.lit(", ".join(fmt_num(a) if not isinstance(a, str) else a for a in allowed)),
                     },
                 )
             else:
@@ -608,26 +327,18 @@ class SparkPlanCompiler:
                         "exclusiveMinimum": "exclusive_minimum",
                         "exclusiveMaximum": "exclusive_maximum",
                     }[kw]
-                    add(cond, kw, code, {"value": val.col, pkey: F.lit(_num_str(s[kw]))})
+                    add(cond, kw, code, {"value": val.col, pkey: F.lit(fmt_num(s[kw]))})
             if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
                 div = s["multipleOf"]
-                if isinstance(div, Fraction):
-                    fdiv = div
-                elif isinstance(div, float):
-                    # a float divisor stands for its decimal literal (the
-                    # reference parses JSON text to exact rationals; Python
-                    # repr round-trips the shortest decimal form)
-                    fdiv = Fraction(Decimal(repr(div)))
-                else:
-                    fdiv = Fraction(div)
+                fdiv = divisor_fraction(div)
                 if fdiv <= 0:
-                    add(F.lit(True), "multipleOf", "invalid_multiple_of", {"multiple_of": F.lit(_num_str(div))})
+                    add(F.lit(True), "multipleOf", "invalid_multiple_of", {"multiple_of": F.lit(fmt_num(div))})
                 elif _is_integer_type(dt) and fdiv.denominator == 1:
                     add(
                         (val.col % F.lit(int(fdiv))) != 0,
                         "multipleOf",
                         "not_multiple_of",
-                        {"multiple_of": F.lit(_num_str(div))},
+                        {"multiple_of": F.lit(fmt_num(div))},
                     )
                 elif isinstance(dt, T.DecimalType) and _decimal_multiple_plan(fdiv, dt) is not None:
                     # decimal column: native remainder at a common exact
@@ -643,41 +354,23 @@ class SparkPlanCompiler:
                     # terminates), _decimal_multiple_plan returns None and
                     # we fall through to the scaled-double path below.
                     cdt = _decimal_multiple_plan(fdiv, dt)
-                    sd_div = _dec_scale(fdiv)
+                    sd_div = dec_scale(fdiv)
                     div_lit = F.lit(Decimal(int(fdiv * 10**sd_div)).scaleb(-sd_div))
                     add(
                         (val.col.cast(cdt) % div_lit.cast(cdt)) != F.lit(0).cast(cdt),
                         "multipleOf",
                         "not_multiple_of",
-                        {"multiple_of": F.lit(_num_str(div))},
+                        {"multiple_of": F.lit(fmt_num(div))},
                     )
                 else:
-                    # float/double column, non-integer or mixed divisor.
-                    # JSON divisors are terminating decimals: v is a multiple
-                    # of d (scale sd) iff w = v*10^sd is an integer and
-                    # w % (d*10^sd) == 0 — pure double+long arithmetic, exact
-                    # for |w| < 2^53 (reference keeps big.Rat; Spark has no
-                    # arbitrary-precision rational — SURVEY §4.2.6; a 1e-9
-                    # relative guard absorbs the binary-vs-decimal ulp noise)
-                    sd = _dec_scale(fdiv)
-                    if sd is None or fdiv * 10**sd > 2**53:
-                        # non-terminating or oversized divisor: no double is
-                        # ever an exact multiple under decimal semantics
-                        add(present, "multipleOf", "not_multiple_of", {"multiple_of": F.lit(_num_str(div))})
-                    else:
-                        m = int(fdiv * 10**sd)
-                        w = val.col.cast("double") * F.lit(float(10**sd))
-                        wr = F.round(w, 0)
-                        small = F.abs(wr) < F.lit(float(2**53))
-                        exact = (F.abs(w - wr) <= F.lit(1e-9) * F.greatest(F.abs(w), F.lit(1.0))) & (
-                            wr.try_cast("bigint") % F.lit(m) == 0
-                        )
-                        # |w| >= 2^53: long arithmetic can't represent it —
-                        # approximate pmod check (documented divergence from
-                        # exact rationals, SURVEY 4.2.6)
-                        approx = F.pmod(w, F.lit(float(m))) == 0.0
-                        is_mult = F.when(small, exact).otherwise(approx)
-                        add(~is_mult, "multipleOf", "not_multiple_of", {"multiple_of": F.lit(_num_str(div))})
+                    # float/double column, non-integer or mixed divisor; a
+                    # non-terminating or oversized divisor has no exact
+                    # double multiple under decimal semantics
+                    is_mult = double_multiple(val.col.cast("double"), fdiv)
+                    add(
+                        present if is_mult is None else ~is_mult,
+                        "multipleOf", "not_multiple_of", {"multiple_of": F.lit(fmt_num(div))},
+                    )
 
         if isinstance(dt, T.StringType):
             if "minLength" in s:
@@ -713,7 +406,7 @@ class SparkPlanCompiler:
 
     # ----------------------------------------------------------------- objects
 
-    def _compile_object(self, s: dict, val: _Val, parts, valids, present: Column, depth: int) -> None:
+    def _compile_object(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
         dt: T.StructType = val.dtype  # type: ignore[assignment]
         fields = {f.name: f for f in dt.fields}
 
@@ -723,13 +416,13 @@ class SparkPlanCompiler:
             conds: list[tuple[Column, Any]] = []
             for prop in s["required"]:
                 if prop in fields:
-                    miss = _safe(present & val.col[prop].isNull())
+                    miss = safe(present & val.col[prop].isNull())
                 else:
                     miss = present  # statically absent field: always missing
                 conds.append((miss, prop))
                 valids.append(~miss)
             parts.append(
-                _summary_violation(
+                summary_violation(
                     conds, val.path, "required",
                     "missing_required_property", "missing_required_properties",
                     sort_plural=False,
@@ -746,20 +439,14 @@ class SparkPlanCompiler:
                 have = val.col[prop].isNotNull()
                 for dep in deps:
                     dep_missing = val.col[dep].isNull() if dep in fields else F.lit(True)
-                    cond = _safe(present & have & dep_missing)
+                    cond = safe(present & have & dep_missing)
                     dr_conds.append((cond, dep))
                     valids.append(~cond)
             if dr_conds:
-                any_cond = dr_conds[0][0]
-                for c, _ in dr_conds[1:]:
-                    any_cond = any_cond | c
-                joined = F.concat_ws(
-                    ", ", *[F.when(c, F.lit(d)) for c, d in dr_conds]
-                )
                 parts.append(
-                    _cond_violation(
-                        _safe(any_cond), val.path, "dependentRequired",
-                        "dependent_property_required", {"missing_properties": joined},
+                    joined_violation(
+                        dr_conds, val.path, "dependentRequired",
+                        "dependent_property_required", "missing_properties",
                     )
                 )
 
@@ -772,16 +459,16 @@ class SparkPlanCompiler:
             cnt = cnt if cnt is not None else F.lit(0)
             if "minProperties" in s:
                 n = int(s["minProperties"])
-                cond = _safe(present & (cnt < n))
+                cond = safe(present & (cnt < n))
                 parts.append(
-                    _cond_violation(cond, val.path, "minProperties", "too_few_properties", {"min_properties": F.lit(n)})
+                    cond_violation(cond, val.path, "minProperties", "too_few_properties", {"min_properties": F.lit(n)})
                 )
                 valids.append(~cond)
             if "maxProperties" in s:
                 n = int(s["maxProperties"])
-                cond = _safe(present & (cnt > n))
+                cond = safe(present & (cnt > n))
                 parts.append(
-                    _cond_violation(cond, val.path, "maxProperties", "too_many_properties", {"max_properties": F.lit(n)})
+                    cond_violation(cond, val.path, "maxProperties", "too_many_properties", {"max_properties": F.lit(n)})
                 )
                 valids.append(~cond)
 
@@ -790,10 +477,10 @@ class SparkPlanCompiler:
             for prop, branch in s["properties"].items():
                 if prop not in fields:
                     continue  # statically absent → subschema never applies
-                sub_val = _Val(
+                sub_val = Val(
                     col=val.col[prop],
                     dtype=fields[prop].dataType,
-                    path=F.concat(val.path, F.lit("/" + _escape_token(prop))),
+                    path=F.concat(val.path, F.lit("/" + escape_token(prop))),
                     in_lambda=val.in_lambda,
                 )
                 sub = self._compile(branch, sub_val, depth)
@@ -803,7 +490,7 @@ class SparkPlanCompiler:
                     # condition (predicates otherwise re-evaluate per use —
                     # measured ~2x on a 4-property numeric schema)
                     viols = self._maybe_stage(sub.violations, val)
-                    bad = _safe(present & (F.size(viols) > 0))
+                    bad = safe(present & (F.size(viols) > 0))
                     parts.append(viols)
                     valids.append(~bad)
                     prop_conds.append((bad, prop))
@@ -815,9 +502,9 @@ class SparkPlanCompiler:
                     # element costs more than duplicated codegen'd predicates)
                     parts.append(sub.violations)
                     valids.append(sub.valid)
-                    prop_conds.append((_safe(present & ~sub.valid), prop))
+                    prop_conds.append((safe(present & ~sub.valid), prop))
             parts.append(
-                _summary_violation(
+                summary_violation(
                     prop_conds, val.path, "properties",
                     "property_mismatch", "properties_mismatch",
                 )
@@ -836,18 +523,18 @@ class SparkPlanCompiler:
                 for name, f in fields.items():
                     if not rx.search(name):
                         continue
-                    sub_val = _Val(
+                    sub_val = Val(
                         col=val.col[name],
                         dtype=f.dataType,
-                        path=F.concat(val.path, F.lit("/" + _escape_token(name))),
+                        path=F.concat(val.path, F.lit("/" + escape_token(name))),
                         in_lambda=val.in_lambda,
                     )
                     sub = self._compile(branch, sub_val, depth)
                     parts.append(sub.violations)
                     valids.append(sub.valid)
-                    pp_conds.append((_safe(present & ~sub.valid), name))
+                    pp_conds.append((safe(present & ~sub.valid), name))
             parts.append(
-                _summary_violation(
+                summary_violation(
                     pp_conds, val.path, "patternProperties",
                     "pattern_property_mismatch", "pattern_properties_mismatch",
                     dedupe_plural=True,
@@ -866,11 +553,11 @@ class SparkPlanCompiler:
             for name in fields:
                 if name_schema.validate(name).valid:
                     continue
-                cond = _safe(present & val.col[name].isNotNull())
+                cond = safe(present & val.col[name].isNotNull())
                 pn_conds.append((cond, name))
                 valids.append(~cond)
             parts.append(
-                _summary_violation(
+                summary_violation(
                     pn_conds, val.path, "propertyNames",
                     "property_name_mismatch", "property_names_mismatch",
                 )
@@ -893,12 +580,18 @@ class SparkPlanCompiler:
                 "additional_property_mismatch", "additional_properties_mismatch",
             )
 
-        # dependentSchemas is compiled once, in _compile_logical (matches the
-        # scalar core's output shape incl. the summary dependent_schema_mismatch
-        # row); compiling it here too double-emitted every sub-violation.
-
         if "unevaluatedProperties" in s:
-            claimed, cond_claims = self._claimed_properties(s, fields, val, depth)
+            # claimed at plan time by unconditional sources; per field, at
+            # runtime, by the gates of the conditional branches claiming it
+            claimed: set = set()
+            cond_claims: dict = {}
+            for gate, c in self._claims(s, val, depth, "Properties"):
+                names = {n for n in fields if c.every or n in c.names or any(_re.search(p, n) for p in c.patterns)}
+                if gate is None:
+                    claimed |= names
+                else:
+                    for n in names:
+                        cond_claims.setdefault(n, []).append(gate)
             extra = [n for n in fields if n not in claimed]
             self._apply_to_extra_fields(
                 s["unevaluatedProperties"], extra, fields, val, parts, valids, present,
@@ -926,98 +619,44 @@ class SparkPlanCompiler:
                 claim = cond_claims[name][0]
                 for c in cond_claims[name][1:]:
                     claim = claim | c
-                unclaimed = ~_safe(claim)
+                unclaimed = ~safe(claim)
             field_present = val.col[name].isNotNull() & unclaimed
-            child_path = F.concat(val.path, F.lit("/" + _escape_token(name)))
+            child_path = F.concat(val.path, F.lit("/" + escape_token(name)))
             if branch is False:
-                cond = _safe(present & field_present)
+                cond = safe(present & field_present)
                 parts.append(
-                    _cond_violation(cond, child_path, "schema", "false_schema_mismatch")
+                    cond_violation(cond, child_path, "schema", "false_schema_mismatch")
                 )
             else:
-                sub_val = _Val(
+                sub_val = Val(
                     col=val.col[name],
                     dtype=fields[name].dataType,
                     path=child_path,
                     in_lambda=val.in_lambda,
                 )
                 sub = self._compile(branch, sub_val, depth + 1)
-                cond = _safe(present & field_present & ~sub.valid)
+                cond = safe(present & field_present & ~sub.valid)
                 parts.append(
-                    F.when(_safe(present & field_present), sub.violations).otherwise(
-                        _empty_violations()
+                    F.when(safe(present & field_present), sub.violations).otherwise(
+                        empty_violations()
                     )
                 )
             conds.append((cond, name))
             valids.append(~cond)
         parts.append(
-            _summary_violation(conds, val.path, keyword, code_single, code_plural)
+            summary_violation(conds, val.path, keyword, code_single, code_plural)
         )
-
-    def _claimed_properties(self, s: dict, fields, val, depth) -> tuple[set, dict]:
-        """(statically-claimed names, {name: [runtime claim conditions]}) for
-        unevaluatedProperties over a fixed StructType. properties /
-        patternProperties in this schema and in allOf children claim
-        unconditionally; anyOf/oneOf/then/else branch claims are gated on the
-        branch's validity expression (annotations flow only from succeeding
-        branches — reference any_of.go:40-46, one_of.go:50-55,
-        conditional.go annotations)."""
-        import re as _re
-
-        claimed: set = set()
-        cond_claims: dict = {}
-
-        def names_of(sub: Any) -> set:
-            out = set()
-            if isinstance(sub, dict):
-                if isinstance(sub.get("properties"), dict):
-                    out |= set(sub["properties"]) & set(fields)
-                if isinstance(sub.get("patternProperties"), dict):
-                    for p in sub["patternProperties"]:
-                        rx = _re.compile(p)
-                        out |= {n for n in fields if rx.search(n)}
-                if "additionalProperties" in sub or "unevaluatedProperties" in sub:
-                    # additionalProperties (and a NESTED unevaluatedProperties)
-                    # evaluates every remaining key, so ALL fields count as
-                    # evaluated for the outer unevaluatedProperties (scalar
-                    # core marks them regardless of the verdict)
-                    out |= set(fields)
-                if "$ref" in sub and isinstance(sub["$ref"], str):
-                    tgt, _ = self.registry.resolve_ref(sub["$ref"], sub, "")
-                    out |= names_of(tgt)
-                for b in sub.get("allOf") or []:
-                    out |= names_of(b)
-            return out
-
-        # the schema's OWN unevaluatedProperties is the keyword being
-        # compiled, not a claim source — strip it before the walk
-        claimed |= names_of({k: v for k, v in s.items() if k != "unevaluatedProperties"})
-        for kw in ("anyOf", "oneOf"):
-            for b in s.get(kw) or []:
-                branch_names = names_of(b)
-                if not branch_names:
-                    continue
-                branch_valid = self._compile(b, val, depth + 1).valid
-                for n in branch_names:
-                    cond_claims.setdefault(n, []).append(branch_valid)
-        if "if" in s:
-            if_valid = self._compile(s["if"], val, depth + 1).valid
-            for n in names_of(s["if"]) | names_of(s.get("then", {})):
-                cond_claims.setdefault(n, []).append(if_valid)
-            for n in names_of(s.get("else", {})):
-                cond_claims.setdefault(n, []).append(~_safe(if_valid))
-        return claimed, cond_claims
 
     # ------------------------------------------------------------------ arrays
 
-    def _compile_array(self, s: dict, val: _Val, parts, valids, present: Column, depth: int) -> None:
+    def _compile_array(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
         dt: T.ArrayType = val.dtype  # type: ignore[assignment]
         elem_dt = dt.elementType
         n = F.size(val.col)
 
         def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = _safe(present & cond)
-            parts.append(_cond_violation(cond, val.path, keyword, code, params))
+            cond = safe(present & cond)
+            parts.append(cond_violation(cond, val.path, keyword, code, params))
             valids.append(~cond)
 
         if "minItems" in s:
@@ -1040,7 +679,7 @@ class SparkPlanCompiler:
         pi_conds: list[tuple[Column, Any]] = []
         for i, branch in enumerate(prefix):
             elem = F.element_at(val.col, i + 1)  # null when out of range
-            sub_val = _Val(
+            sub_val = Val(
                 col=F.when(n > i, elem),  # treat out-of-range as absent
                 dtype=elem_dt,
                 path=F.concat(val.path, F.lit(f"/{i}")),
@@ -1049,9 +688,9 @@ class SparkPlanCompiler:
             sub = self._compile(branch, sub_val, depth)
             parts.append(sub.violations)
             valids.append(sub.valid)
-            pi_conds.append((_safe(present & ~sub.valid), i))
+            pi_conds.append((safe(present & ~sub.valid), i))
         parts.append(
-            _summary_violation(
+            summary_violation(
                 pi_conds, val.path, "prefixItems",
                 "prefix_item_mismatch", "prefix_items_mismatch",
                 param_single="index", param_plural="indexs", sort_plural=False,
@@ -1062,7 +701,7 @@ class SparkPlanCompiler:
             branch = s["items"]
             # per-element violations via transform → flatten (no shuffle)
             def _elem_violations(x: Column, i: Column) -> Column:
-                sub_val = _Val(
+                sub_val = Val(
                     col=x,
                     dtype=elem_dt,
                     path=F.concat(val.path, F.lit("/"), i.cast("string")),
@@ -1070,31 +709,19 @@ class SparkPlanCompiler:
                 )
                 node = self._compile(branch, sub_val, depth)
                 if prefix:
-                    return F.when(i >= len(prefix), node.violations).otherwise(_empty_violations())
+                    return F.when(i >= len(prefix), node.violations).otherwise(empty_violations())
                 return node.violations
 
             # ONE evaluation of the per-element schema (staged when possible);
             # leafs AND the scalar-parity summary row both derive from it
             pev = self._maybe_stage(F.transform(val.col, _elem_violations), val)
-            parts.append(F.when(present, F.flatten(pev)).otherwise(_empty_violations()))
-            bad_idx = F.filter(
-                F.transform(pev, lambda a, i: F.when(F.size(a) > 0, i)),
-                lambda x: x.isNotNull(),
-            )
-            parts.append(
-                _dynamic_index_summary(
-                    present, bad_idx, val.path, "items", "item_mismatch", "items_mismatch"
-                )
-            )
-            valids.append(
-                _safe(F.when(present, F.size(F.flatten(pev)) == 0).otherwise(F.lit(True))) | ~present
-            )
+            element_summary(present, pev, val.path, "items", "item_mismatch", "items_mismatch", parts, valids)
 
         if "contains" in s:
             branch = s["contains"]
 
             def _match(x: Column) -> Column:
-                sub_val = _Val(col=x, dtype=elem_dt, path=_lit_path(""), in_lambda=True)
+                sub_val = Val(col=x, dtype=elem_dt, path=F.lit(""), in_lambda=True)
                 return self._compile(branch, sub_val, depth).valid
 
             matches = F.size(F.filter(val.col, _match))
@@ -1105,52 +732,32 @@ class SparkPlanCompiler:
             if max_c is not None:
                 add(matches > int(max_c), "maxContains", "contains_too_many_items", {"max_contains": F.lit(int(max_c))})
 
-        if "unevaluatedItems" in s and not isinstance(s.get("items"), (dict, bool)):
-            # static resolution (SURVEY §2.3): with no `items`, evaluated
-            # indexes are [0, len(prefixItems)) plus contains-matched elements
+        if "unevaluatedItems" in s:
+            # static resolution (SURVEY §2.3): an element is evaluated when a
+            # claim source covers its index or a claimed contains matches it
             branch = s["unevaluatedItems"]
-            contains = s.get("contains")
+            sources = self._claims(s, val, depth, "Items")
 
             def _uneval_violations(x: Column, i: Column) -> Column:
-                evaluated = i < len(prefix)
-                if contains is not None:
-                    c_val = _Val(col=x, dtype=elem_dt, path=_lit_path(""), in_lambda=True)
-                    evaluated = evaluated | _safe(self._compile(contains, c_val, depth).valid)
-                child_path = F.concat(val.path, F.lit("/"), i.cast("string"))
-                if branch is False:
-                    # scalar: False subschema yields a false_schema_mismatch
-                    # LEAF at the child path (the summary row is separate)
-                    v = _cond_violation(F.lit(True), child_path, "schema", "false_schema_mismatch")
-                else:
-                    sub_val = _Val(col=x, dtype=elem_dt, path=child_path, in_lambda=True)
-                    v = self._compile(branch, sub_val, depth).violations
-                return F.when(~evaluated, v).otherwise(_empty_violations())
+                x_val = Val(col=x, dtype=elem_dt, path=F.concat(val.path, F.lit("/"), i.cast("string")), in_lambda=True)
+                evaluated = self._item_claimed(sources, x_val, i, depth)
+                return F.when(~evaluated, self._compile(branch, x_val, depth).violations).otherwise(empty_violations())
 
-            if branch is not True and branch != {}:
+            if branch is not True and branch != {} and not self._evaluates_all(sources):
                 pev = self._maybe_stage(F.transform(val.col, _uneval_violations), val)
-                parts.append(F.when(present, F.flatten(pev)).otherwise(_empty_violations()))
-                bad_idx = F.filter(
-                    F.transform(pev, lambda a, i: F.when(F.size(a) > 0, i)),
-                    lambda x: x.isNotNull(),
-                )
-                parts.append(
-                    _dynamic_index_summary(
-                        present, bad_idx, val.path, "unevaluatedItems",
-                        "unevaluated_item_mismatch", "unevaluated_items_mismatch",
-                    )
-                )
-                valids.append(
-                    _safe(F.when(present, F.size(F.flatten(pev)) == 0).otherwise(F.lit(True))) | ~present
+                element_summary(
+                    present, pev, val.path, "unevaluatedItems",
+                    "unevaluated_item_mismatch", "unevaluated_items_mismatch", parts, valids,
                 )
 
     # -------------------------------------------------------------------- maps
 
-    def _compile_map(self, s: dict, val: _Val, parts, valids, present: Column, depth: int) -> None:
+    def _compile_map(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
         dt: T.MapType = val.dtype  # type: ignore[assignment]
 
         def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = _safe(present & cond)
-            parts.append(_cond_violation(cond, val.path, keyword, code, params))
+            cond = safe(present & cond)
+            parts.append(cond_violation(cond, val.path, keyword, code, params))
             valids.append(~cond)
 
         n = F.size(val.col)
@@ -1163,11 +770,11 @@ class SparkPlanCompiler:
         if "required" in s and isinstance(s["required"], list):
             req_conds: list[tuple[Column, Any]] = []
             for prop in s["required"]:
-                cond = _safe(present & ~F.array_contains(F.map_keys(val.col), prop))
+                cond = safe(present & ~F.array_contains(F.map_keys(val.col), prop))
                 req_conds.append((cond, prop))
                 valids.append(~cond)
             parts.append(
-                _summary_violation(
+                summary_violation(
                     req_conds, val.path, "required",
                     "missing_required_property", "missing_required_properties",
                     sort_plural=False,
@@ -1176,120 +783,14 @@ class SparkPlanCompiler:
         if "propertyNames" in s and isinstance(s["propertyNames"], dict):
             pn = s["propertyNames"]
             if "pattern" in pn:
-                bad = F.filter(F.map_keys(val.col), lambda k: ~_safe(k.rlike(pn["pattern"])))
-                nbad = F.size(bad)
+                bad = F.filter(F.map_keys(val.col), lambda k: ~safe(k.rlike(pn["pattern"])))
                 parts.append(
-                    F.when(
-                        _safe(present & (nbad == 1)),
-                        F.array(_mk_violation(
-                            val.path, "propertyNames", "property_name_mismatch",
-                            {"property": F.element_at(bad, 1)},
-                        )),
-                    )
-                    .when(
-                        _safe(present & (nbad > 1)),
-                        F.array(_mk_violation(
-                            val.path, "propertyNames", "property_names_mismatch",
-                            {"properties": F.array_join(F.array_sort(bad), ", ")},
-                        )),
-                    )
-                    .otherwise(_empty_violations())
-                )
-                valids.append(~_safe(present & (nbad > 0)))
-
-    # ----------------------------------------------------------------- logical
-
-    def _compile_logical(self, s: dict, val: _Val, parts, valids, present: Column, depth: int) -> None:
-        if "allOf" in s and isinstance(s["allOf"], list):
-            subs = [self._compile(branch, val, depth) for branch in s["allOf"]]
-            for sub in subs:
-                valids.append(sub.valid)
-
-            def _allof_summary(conds: list[tuple[Column, int]]) -> Column:
-                # scalar core emits ONE all_of_item_mismatch with the failing
-                # indices joined, regardless of count (evaluator.py:259-260)
-                any_bad = conds[0][0]
-                for c, _ in conds[1:]:
-                    any_bad = any_bad | c
-                joined = F.concat_ws(", ", *[F.when(c, F.lit(str(i))) for c, i in conds])
-                return _cond_violation(
-                    _safe(any_bad), val.path, "allOf", "all_of_item_mismatch",
-                    {"indexs": joined},
-                )
-
-            if subs:
-                for sub in subs:
-                    parts.append(sub.violations)
-                parts.append(
-                    _allof_summary(
-                        [(_safe(present & ~sub.valid), i) for i, sub in enumerate(subs)]
+                    list_summary(
+                        present, bad, val.path, "propertyNames",
+                        "property_name_mismatch", "property_names_mismatch",
                     )
                 )
-
-        if "anyOf" in s and isinstance(s["anyOf"], list):
-            branch_valid = [self._compile(b, val, depth).valid for b in s["anyOf"]]
-            ok = branch_valid[0]
-            for c in branch_valid[1:]:
-                ok = ok | c
-            cond = _safe(present & ~ok)
-            parts.append(_cond_violation(cond, val.path, "anyOf", "any_of_item_mismatch"))
-            valids.append(~cond)
-
-        if "oneOf" in s and isinstance(s["oneOf"], list):
-            branch_valid = [self._compile(b, val, depth).valid for b in s["oneOf"]]
-            cnt = branch_valid[0].cast("int")
-            for c in branch_valid[1:]:
-                cnt = cnt + c.cast("int")
-            none_cond = _safe(present & (cnt == 0))
-            multi_cond = _safe(present & (cnt > 1))
-            parts.append(_cond_violation(none_cond, val.path, "oneOf", "one_of_item_mismatch"))
-            parts.append(
-                _cond_violation(multi_cond, val.path, "oneOf", "one_of_multiple_matches", {"matches": cnt})
-            )
-            valids.append(_safe(cnt == 1) | ~present)
-
-        if "not" in s:
-            sub = self._compile(s["not"], val, depth)
-            cond = _safe(present & sub.valid)
-            parts.append(_cond_violation(cond, val.path, "not", "not_schema_mismatch"))
-            valids.append(~cond)
-
-        if "if" in s:
-            cond_node = self._compile(s["if"], val, depth)
-            if "then" in s:
-                then_node = self._compile(s["then"], val, depth)
-                taken = _safe(present & cond_node.valid)
-                parts.append(F.when(taken, then_node.violations).otherwise(_empty_violations()))
-                parts.append(
-                    _cond_violation(taken & ~then_node.valid, val.path, "then", "if_then_mismatch")
-                )
-                valids.append(~taken | _safe(then_node.valid))
-            if "else" in s:
-                else_node = self._compile(s["else"], val, depth)
-                taken = _safe(present & ~cond_node.valid)
-                parts.append(F.when(taken, else_node.violations).otherwise(_empty_violations()))
-                parts.append(
-                    _cond_violation(taken & ~else_node.valid, val.path, "else", "if_else_mismatch")
-                )
-                valids.append(~taken | _safe(else_node.valid))
-
-        if "dependentSchemas" in s and isinstance(s["dependentSchemas"], dict) and isinstance(val.dtype, T.StructType):
-            fields = {f.name for f in val.dtype.fields}
-            ds_conds: list[tuple[Column, Any]] = []
-            for prop, branch in s["dependentSchemas"].items():
-                if prop not in fields:
-                    continue
-                sub = self._compile(branch, val, depth)
-                have = _safe(present & val.col[prop].isNotNull())
-                parts.append(F.when(have, sub.violations).otherwise(_empty_violations()))
-                ds_conds.append((_safe(have & ~sub.valid), prop))
-                valids.append(~have | _safe(sub.valid))
-            parts.append(
-                _summary_violation(
-                    ds_conds, val.path, "dependentSchemas",
-                    "dependent_schema_mismatch", "dependent_schemas_mismatch",
-                )
-            )
+                valids.append(~safe(present & (F.size(bad) > 0)))
 
 
 def validate_dataframe(

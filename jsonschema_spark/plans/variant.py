@@ -5,10 +5,16 @@ Where plans.columns compiles against a fixed StructType, this compiler lowers
 the same JSON Schema semantics onto `try_parse_json` variants: typing via
 `schema_of_variant` (BIGINT / DECIMAL(p,0) => integer, VOID => JSON null,
 SQL NULL => absent), traversal via `try_variant_get`, arrays via
-`cast to array<variant>` + higher-order functions. Zero Python per row —
-this replaces the Arrow-batched scalar-evaluator UDF for the large supported
-subset (functions.udf falls back to the UDF only for the residue:
-patternProperties / unevaluated* / $dynamicRef / content vocabulary).
+`cast to array<variant>` + higher-order functions, object keys via
+`cast to map<string,variant>`. Zero Python per row. The applicator layer
+(logical applicators, $ref / $dynamicRef, unevaluated* claims, summary rows)
+is the shared planner core in plans.core.
+
+functions.udf falls back to the Arrow-batched scalar-evaluator UDF only for
+the residue: keywords outside `_SUPPORTED` (content vocabulary, legacy
+`dependencies`, ...), property names not expressible as variant paths,
+propertyNames subschemas beyond plain string predicates, unevaluated* beside
+a sibling `$ref` / `$dynamicRef`, and schemas nested deeper than `MAX_DEPTH`.
 
 Reference analogue: the same keyword semantics as validate.go evaluate, with
 the dynamic `getDataType` dispatch (utils.go:37-60) done by
@@ -19,37 +25,39 @@ Documented divergences (same contract as SURVEY §4.2.6):
   numbers; integers beyond 2^53 and >15-significant-digit decimals may
   diverge from exact-rational semantics;
 - uniqueItems compares canonical `to_json` serializations (variant
-  normalizes number forms first, e.g. 2.0 -> 2).
+  normalizes number forms first, e.g. 2.0 -> 2);
+- non-integral numbers in params print in Spark's double form, which uses
+  exponent notation for magnitudes below 1e-3 or from 1e7.
 """
 
 from __future__ import annotations
 
-from decimal import Decimal
 from fractions import Fraction
 from typing import Any
-from itertools import count as _it_count
-
-_STAGE_IDS = _it_count()
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from jsonschema_spark.formats import SPARK_REGEX_FORMATS
-from jsonschema_spark.plans.columns import (
-    VIOLATION_SCHEMA_DDL,
-    _concat_violations,
-    _cond_violation,
-    _empty_violations,
-    _safe,
-    _summary_violation,
+from jsonschema_spark.json_values import fmt_num
+from jsonschema_spark.plans.core import (
+    Node,
+    PlanCompiler,
+    Val,
+    cond_violation,
+    divisor_fraction,
+    double_multiple,
+    element_summary,
+    empty_violations,
+    escape_token,
+    joined_violation,
+    list_summary,
+    mk_violation,
+    safe,
+    summary_violation,
 )
 
-_VIOL_ARR_DDL = VIOLATION_SCHEMA_DDL
-from jsonschema_spark.registry import Registry
-
 __all__ = ["VariantPlanCompiler", "VariantCompileError", "validate_variant_column"]
-
-_MAX_DEPTH = 16
 
 # keywords the variant path supports; anything else => fall back to UDF path
 _SUPPORTED = {
@@ -76,26 +84,16 @@ _NAME_SCHEMA_KEYWORDS = {
     "title", "description", "$comment",
 }
 
+_BOUNDS = (
+    ("minimum", "value_below_minimum", "minimum", lambda x, b: x < b),
+    ("maximum", "value_above_maximum", "maximum", lambda x, b: x > b),
+    ("exclusiveMinimum", "exclusive_minimum_mismatch", "exclusive_minimum", lambda x, b: x <= b),
+    ("exclusiveMaximum", "exclusive_maximum_mismatch", "exclusive_maximum", lambda x, b: x >= b),
+)
+
 
 class VariantCompileError(ValueError):
     pass
-
-
-def _uneval_claims_static(s: Any) -> bool:
-    """True when unevaluatedProperties' claims are expressible on the variant
-    path. Conditional branches (anyOf/oneOf/if/dependentSchemas) compile to
-    runtime-gated claim predicates; only a SIBLING $ref is refused — the
-    $ref/rest split in _compile hides the target's claims from the
-    unevaluatedProperties analysis (route to the scalar/UDF path)."""
-    if not isinstance(s, dict):
-        return True
-    if "$ref" in s or "$dynamicRef" in s:
-        return False
-    return all(_uneval_claims_static(b) for b in s.get("allOf") or [])
-
-
-def _vtype(v: Column) -> Column:
-    return F.schema_of_variant(v)
 
 
 def _esc_key(k: Column) -> Column:
@@ -130,34 +128,36 @@ def _json_type(t: Column, v: Column) -> Column:
     )
 
 
-class _Node:
-    def __init__(self, valid: Column, violations: Column):
-        self.valid = valid
-        self.violations = violations
+def _num_text(v: Column, num: Column) -> Column:
+    """A numeric variant printed like json_values.fmt_num: integral values
+    without a fraction part ("3", never "3.0"), others in double form."""
+    return F.when(
+        num == F.floor(num),
+        F.coalesce(F.try_variant_get(v, "$", "decimal(38,0)").cast("string"), num.cast("string")),
+    ).otherwise(num.cast("string"))
 
 
-class VariantPlanCompiler:
+class VariantPlanCompiler(PlanCompiler):
+    """Value model: a variant Column typed at runtime by `schema_of_variant`.
+
+    Recursive $ref / $dynamicRef unroll ``max_unroll`` times per target:
+    dynamic JSON has no static type to ground out on (unlike plans.columns),
+    so a value still present at the horizon FAILS CLOSED with the
+    ref-mismatch violation, never a silent pass (documented engine bound,
+    like the scalar depth guard). Instances no deeper than ``max_unroll``
+    validate exactly like the scalar core."""
+
+    error = VariantCompileError
+    MAX_DEPTH = 16  # depth counts every child step and $ref hop
+    depth_error = "schema nesting exceeds bounded unroll depth"
+
     def __init__(
         self, schema: Any, *, assert_format: bool = True, max_unroll: int = 5
     ) -> None:
-        from jsonschema_spark.dialects import normalize_schema
-
-        schema = normalize_schema(schema)  # accept legacy dialects via $schema
-        self.schema = schema
-        self.assert_format = assert_format
-        self.registry = Registry()
-        self.registry.register(schema, "")
-        self._stages: list[tuple[str, Column]] | None = None
-        self._in_lambda = False
-        # recursive $ref / $dynamicRef bounded unrolling: dynamic JSON has no
-        # static type to ground out on (unlike plans.columns), so cycles
-        # unroll max_unroll times and then FAIL CLOSED — a value still
-        # present at the horizon gets the ref-mismatch violation, never a
-        # silent pass (documented engine bound, like the scalar depth guard)
+        super().__init__(schema, assert_format=assert_format)
         self.max_unroll = max_unroll
         self._ref_counts: dict[int, int] = {}
-        self._scope: list[str] = []  # static dynamic-scope base-URI stack
-        self._check_supported(schema)
+        self._check_supported(self.schema)
 
     def _check_supported(self, schema: Any, depth: int = 0) -> None:
         if depth > 64 or not isinstance(schema, dict):
@@ -179,7 +179,7 @@ class VariantPlanCompiler:
                     self._check_supported(s, depth + 1)
             elif kw in (
                 "items", "not", "if", "then", "else", "contains",
-                "additionalProperties", "unevaluatedProperties",
+                "additionalProperties", "unevaluatedProperties", "unevaluatedItems",
             ):
                 self._check_supported(sub, depth + 1)
             elif kw in ("allOf", "anyOf", "oneOf", "prefixItems") and isinstance(sub, list):
@@ -191,23 +191,12 @@ class VariantPlanCompiler:
                     raise VariantCompileError(
                         f"propertyNames keywords {sorted(bad)} need the UDF path"
                     )
-            if kw == "unevaluatedProperties" and not _uneval_claims_static(schema):
-                # runtime-conditional claims need annotation flow — UDF path
-                raise VariantCompileError(
-                    "unevaluatedProperties with conditional applicators needs the UDF path"
-                )
-            if kw == "unevaluatedItems" and (
-                "$ref" in schema or "$dynamicRef" in schema
-            ):
-                # a SIBLING ($dynamic)$ref hides the target's item claims
-                # from this analysis (the ref/rest split in _compile) — UDF
-                # path; allOf/anyOf/oneOf/if/dependentSchemas claims thread
-                # through _conditional_item_claims
-                raise VariantCompileError(
-                    "unevaluatedItems with sibling $ref needs the UDF path"
-                )
-            if kw == "unevaluatedItems":
-                self._check_supported(sub, depth + 1)
+            if kw in ("unevaluatedProperties", "unevaluatedItems") and ("$ref" in schema or "$dynamicRef" in schema):
+                # the target compiles twice, for its own rows and as the
+                # claim gate, and under an items lambda the gate re-runs per
+                # key: 8x slower than the UDF on 2,048 raw-JSON docs with
+                # $ref'd span items (local[2], 4-core x86)
+                raise VariantCompileError(f"{kw} beside a sibling $ref / $dynamicRef needs the UDF path")
 
     # ------------------------------------------------------------------ public
 
@@ -217,171 +206,74 @@ class VariantPlanCompiler:
         root_path: Column | None = None,
         stages: list[tuple[str, Column]] | None = None,
     ) -> Column:
-        """When ``stages`` is passed, expensive multiply-referenced
-        subexpressions (per-key transforms for the dynamic-object residue)
-        are appended as (name, Column) pairs the caller must withColumn
-        FIRST (same mechanism as SparkPlanCompiler — Catalyst does not CSE
-        non-cheap exprs inside one projection)."""
-        self._stages = stages
-        try:
-            node = self._compile(
-                self.schema, variant_col, root_path if root_path is not None else F.lit(""), 0
-            )
-        finally:
-            self._stages = None
-        return node.violations
-
-    def _maybe_stage(self, col: Column) -> Column:
-        if self._stages is None or self._in_lambda:
-            return col
-        # process-global counter: two compiler instances appending to one
-        # shared stages list (e.g. two contentSchema sites in one typed plan)
-        # must never collide on names — a caller attaching stages via a
-        # single select / dedupe-by-name would silently miscompute otherwise
-        name = f"__jsv_stage_{next(_STAGE_IDS)}"
-        self._stages.append((name, col))
-        return F.col(name)
+        """Violations of the variant column; ``stages`` as in
+        :meth:`PlanCompiler._compile_root` (per-key transforms for the
+        dynamic-object residue, typed values, claim gates)."""
+        root = Val(variant_col, root_path if root_path is not None else F.lit(""))
+        return self._compile_root(root, stages).violations
 
     def valid_column(self, variant_col: Column) -> Column:
-        return self._compile(self.schema, variant_col, F.lit(""), 0).valid
+        return self._compile_root(Val(variant_col, F.lit("")), None).valid
 
-    # ---------------------------------------------------------------- internal
+    # ------------------------------------------------------------- value model
 
-    def _compile(self, schema: Any, v: Column, path: Column, depth: int) -> _Node:
-        if depth > _MAX_DEPTH:
-            raise VariantCompileError("schema nesting exceeds bounded unroll depth")
-        if schema is True or schema == {}:
-            return _Node(F.lit(True), _empty_violations())
-        if schema is False:
-            # an ABSENT value (SQL NULL — e.g. zip-padding beyond array end)
-            # satisfies even the false schema; JSON null (VOID) does not
-            return _Node(
-                v.isNull(),
-                _cond_violation(v.isNotNull(), path, "schema", "false_schema_mismatch"),
-            )
-        if not isinstance(schema, dict):
-            raise VariantCompileError("schema must be bool or object")
-
-        # static dynamic-scope tracking: the whole plan inlines, so the scope
-        # at each compile point is the chain of $id resources entered so far
-        base = self.registry.base_of(schema)
-        pushed = False
-        if base and (not self._scope or self._scope[-1] != base):
-            self._scope.append(base)
-            pushed = True
-        try:
-            return self._compile_dict(schema, v, path, depth)
-        finally:
-            if pushed:
-                self._scope.pop()
-
-    def _compile_dict(self, schema: dict, v: Column, path: Column, depth: int) -> _Node:
-        if "$ref" in schema or "$dynamicRef" in schema:
-            nodes: list[_Node] = []
-            if "$ref" in schema and isinstance(schema["$ref"], str):
-                target, _ = self.registry.resolve_ref(schema["$ref"], schema, "")
-                nodes.append(
-                    self._ref_node(target, v, path, depth, "$ref", "ref_mismatch")
-                )
-            if "$dynamicRef" in schema and isinstance(schema["$dynamicRef"], str):
-                target = self._resolve_dynamic_static(schema["$dynamicRef"], schema)
-                nodes.append(
-                    self._ref_node(
-                        target, v, path, depth, "$dynamicRef", "dynamic_ref_mismatch"
-                    )
-                )
-            rest = {
-                k: val for k, val in schema.items() if k not in ("$ref", "$dynamicRef")
-            }
-            if rest:
-                nodes.append(self._compile(rest, v, path, depth))
-            valid = nodes[0].valid
-            for n in nodes[1:]:
-                valid = valid & n.valid
-            return _Node(valid, _concat_violations([n.violations for n in nodes]))
-
-        present = v.isNotNull()  # SQL NULL == absent; VOID variant == JSON null
-        # stage the variant value and its type string once per compile level:
-        # schema_of_variant / try_variant_get otherwise re-run per keyword
-        # reference (no CSE inside one projection — measured)
-        return self._compile_body(schema, v, path, depth, present)
-
-    def _ref_node(
-        self, target: Any, v: Column, path: Column, depth: int, keyword: str, code: str
-    ) -> _Node:
-        """Compile a ($dynamic)$ref target with bounded cycle unrolling.
-
-        Reference analogue: validate.go:155-177 dynamic resolution; the
-        scalar core recurses with a depth guard. Dynamic JSON has no static
-        type to ground the recursion, so each distinct target unrolls
-        max_unroll times; a value still PRESENT at the horizon fails closed
-        with the ref-mismatch violation (never a silent pass). Instances no
-        deeper than max_unroll validate exactly like the scalar."""
+    def _compile_ref(self, target: Any, val: Val, depth: int) -> Node:
         key = id(target)
         cnt = self._ref_counts.get(key, 0)
         if cnt >= self.max_unroll:
-            return _Node(
-                v.isNull(), _cond_violation(v.isNotNull(), path, keyword, code)
-            )
+            # the horizon: valid only when absent; the core adds the
+            # ref-mismatch row for a present value
+            return Node(val.col.isNull(), empty_violations())
         self._ref_counts[key] = cnt + 1
         try:
-            node = self._compile(target, v, path, depth + 1)
+            return self._compile(target, val, depth)
         finally:
             self._ref_counts[key] = cnt
-        # scalar core adds a mismatch summary atop the target's violations
-        # (evaluator.py:235)
-        viols = _concat_violations(
-            [node.violations, _cond_violation(_safe(~node.valid), path, keyword, code)]
+
+    def _typed(self, val: Val) -> Val:
+        # stage the variant value and its type string once per compile level:
+        # schema_of_variant / try_variant_get otherwise re-run per keyword
+        # reference (no CSE inside one projection — measured)
+        v = self._maybe_stage(val.col, val)
+        return Val(v, val.path, self._maybe_stage(F.schema_of_variant(v), val), val.in_lambda)
+
+    def _false_node(self, val: Val) -> Node:
+        # an ABSENT value (SQL NULL — e.g. zip-padding beyond array end)
+        # satisfies even the false schema; JSON null (VOID) does not
+        return Node(
+            val.col.isNull(),
+            cond_violation(val.col.isNotNull(), val.path, "schema", "false_schema_mismatch"),
         )
-        return _Node(node.valid, viols)
 
-    def _resolve_dynamic_static(self, ref: str, schema: dict) -> Any:
-        """$dynamicRef target under the STATIC scope chain (same algorithm as
-        plans.columns._resolve_dynamic_static / evaluator._resolve_dynamic:
-        bookended plain-name fragments search the scope outermost-first)."""
-        try:
-            target, _ = self.registry.resolve_ref(ref, schema, "")
-        except KeyError as exc:
-            raise VariantCompileError(f"unresolvable $dynamicRef: {ref!r}") from exc
-        frag = ref.split("#", 1)[1] if "#" in ref else ""
-        if frag and not frag.startswith("/"):
-            if isinstance(target, dict) and target.get("$dynamicAnchor") == frag:
-                hit = self.registry.find_dynamic(frag, self._scope)
-                if hit is not None:
-                    return hit
-        return target
+    def _node(self, present: Column, parts: list, valids: list) -> Node:
+        # SQL NULL == absent (valid, no rows); VOID == JSON null
+        node = super()._node(present, parts, valids)
+        return Node(
+            F.when(present, node.valid).otherwise(F.lit(True)),
+            F.when(present, node.violations).otherwise(empty_violations()),
+        )
 
-    def _compile_body(
-        self, schema: dict, v: Column, path: Column, depth: int, present: Column
-    ) -> _Node:
-        if self._stages is not None and not self._in_lambda:
-            v = self._maybe_stage(v)
-            t = self._maybe_stage(_vtype(v))
-        else:
-            t = _vtype(v)
-        jt = _json_type(t, v)
-        parts: list[Column] = []
-        valids: list[Column] = []
+    def _has(self, val: Val, name: str) -> Column:
+        return val.dtype.startswith("OBJECT") & self._child(val, name).isNotNull()
 
+    @staticmethod
+    def _child(val: Val, name: str) -> Column:
+        return F.try_variant_get(val.col, f"$['{name}']", "variant")
+
+    def _compile_value(self, s: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
         def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = present & _safe(cond_violated)
-            parts.append(_cond_violation(cond, path, keyword, code, params))
+            cond = present & safe(cond_violated)
+            parts.append(cond_violation(cond, val.path, keyword, code, params))
             valids.append(~cond)
 
-        self._assertions(schema, v, t, jt, add)
-        self._object_kw(schema, v, t, path, parts, valids, present, depth)
-        self._array_kw(schema, v, t, path, parts, valids, present, depth)
-        self._logical_kw(schema, v, path, parts, valids, present, depth)
-
-        valid = F.lit(True)
-        for c in valids:
-            valid = valid & c
-        violations = F.when(present, _concat_violations(parts)).otherwise(_empty_violations())
-        return _Node(F.when(present, valid).otherwise(F.lit(True)), violations)
+        self._assertions(s, val.col, val.dtype, add)
+        self._object_kw(s, val, parts, valids, present, depth)
+        self._array_kw(s, val, parts, valids, present, depth)
 
     # ------------------------------------------------------------- assertions
 
-    def _assertions(self, s: dict, v: Column, t: Column, jt: Column, add) -> None:
+    def _assertions(self, s: dict, v: Column, t: Column, add) -> None:
+        jt = _json_type(t, v)
         num = F.try_variant_get(v, "$", "double")
         text = F.when(t == "STRING", F.try_variant_get(v, "$", "string"))
 
@@ -396,46 +288,35 @@ class VariantPlanCompiler:
         if "enum" in s and isinstance(s["enum"], list):
             ok = F.lit(False)
             for item in s["enum"]:
-                ok = ok | self._eq_const(v, t, jt, num, text, item)
-            add(~ok, "enum", "value_not_in_enum",
-                {"received": F.try_variant_get(v, "$", "string")})
+                ok = ok | self._eq_const(v, t, num, text, item)
+            # received / expected as the scalar core prints them
+            received = (
+                F.when(jt == "string", text)
+                .when(jt.isin("integer", "number"), _num_text(v, num))
+                .when(jt == "boolean", F.try_variant_get(v, "$", "string"))
+                .otherwise(jt)
+            )
+            expected = ", ".join(x if isinstance(x, str) else fmt_num(x) for x in s["enum"])
+            add(~ok, "enum", "value_not_in_enum", {"received": received, "expected": F.lit(expected)})
 
         if "const" in s:
-            add(~self._eq_const(v, t, jt, num, text, s["const"]), "const", "const_mismatch")
+            add(~self._eq_const(v, t, num, text, s["const"]), "const", "const_mismatch")
 
-        for kw, code, mk in (
-            ("minimum", "value_below_minimum", lambda b: num < b),
-            ("maximum", "value_above_maximum", lambda b: num > b),
-            ("exclusiveMinimum", "exclusive_minimum_mismatch", lambda b: num <= b),
-            ("exclusiveMaximum", "exclusive_maximum_mismatch", lambda b: num >= b),
-        ):
+        for kw, code, pkey, mk in _BOUNDS:
             if kw in s and isinstance(s[kw], (int, float, Fraction)) and not isinstance(s[kw], bool):
-                bound = F.lit(float(s[kw]))
-                add(_is_number_t(t) & mk(bound), kw, code, {"value": num.cast("string")})
+                add(_is_number_t(t) & mk(num, F.lit(float(s[kw]))), kw, code,
+                    {"value": _num_text(v, num), pkey: F.lit(fmt_num(s[kw]))})
 
         if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
             div = s["multipleOf"]
-            fdiv = Fraction(Decimal(repr(div))) if isinstance(div, float) else Fraction(div)
+            fdiv = divisor_fraction(div)
+            param = {"multiple_of": F.lit(fmt_num(div))}
             if fdiv <= 0:
-                add(F.lit(True), "multipleOf", "invalid_multiple_of")
+                add(F.lit(True), "multipleOf", "invalid_multiple_of", param)
             else:
-                from jsonschema_spark.plans.columns import _dec_scale
-
-                sd = _dec_scale(fdiv)
-                if sd is None or fdiv * 10**sd > 2**53:
-                    add(_is_number_t(t), "multipleOf", "not_multiple_of")
-                else:
-                    m = int(fdiv * 10**sd)
-                    w = num * F.lit(float(10**sd))
-                    wr = F.round(w, 0)
-                    small = F.abs(wr) < F.lit(float(2**53))
-                    exact = (F.abs(w - wr) <= F.lit(1e-9) * F.greatest(F.abs(w), F.lit(1.0))) & (
-                        wr.try_cast("bigint") % F.lit(m) == 0
-                    )
-                    approx = F.pmod(w, F.lit(float(m))) == 0.0
-                    is_mult = F.when(small, exact).otherwise(approx)
-                    add(_is_number_t(t) & ~is_mult, "multipleOf", "not_multiple_of",
-                        {"multiple_of": F.lit(str(div))})
+                is_mult = double_multiple(num, fdiv)
+                cond = _is_number_t(t) if is_mult is None else _is_number_t(t) & ~is_mult
+                add(cond, "multipleOf", "not_multiple_of", param)
 
         if "minLength" in s:
             n = int(s["minLength"])
@@ -454,7 +335,7 @@ class VariantPlanCompiler:
                 add((t == "STRING") & ~text.rlike(rx), "format", "format_mismatch",
                     {"format": F.lit(s["format"])})
 
-    def _eq_const(self, v: Column, t: Column, jt: Column, num: Column, text: Column, item: Any) -> Column:
+    def _eq_const(self, v: Column, t: Column, num: Column, text: Column, item: Any) -> Column:
         if item is None:
             return t == "VOID"
         if isinstance(item, bool):
@@ -470,18 +351,18 @@ class VariantPlanCompiler:
 
     # ---------------------------------------------------------------- objects
 
-    def _object_kw(self, s: dict, v: Column, t: Column, path: Column, parts, valids, present: Column, depth: int) -> None:
-        is_obj = t.startswith("OBJECT")
+    def _object_kw(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
+        v, path = val.col, val.path
+        is_obj = val.dtype.startswith("OBJECT")
 
         if "required" in s and isinstance(s["required"], list):
             req_conds = []
             for name in s["required"]:
-                missing = is_obj & F.try_variant_get(v, f"$['{name}']", "variant").isNull()
-                cond = present & _safe(missing)
+                cond = present & safe(is_obj & self._child(val, name).isNull())
                 req_conds.append((cond, name))
                 valids.append(~cond)
             parts.append(
-                _summary_violation(
+                summary_violation(
                     req_conds, path, "required",
                     "missing_required_property", "missing_required_properties",
                     sort_plural=False,
@@ -491,43 +372,38 @@ class VariantPlanCompiler:
         if "dependentRequired" in s and isinstance(s["dependentRequired"], dict):
             dr_conds = []
             for trigger, needs in s["dependentRequired"].items():
-                trig = F.try_variant_get(v, f"$['{trigger}']", "variant").isNotNull()
+                trig = self._child(val, trigger).isNotNull()
                 for name in needs:
-                    missing = is_obj & trig & F.try_variant_get(v, f"$['{name}']", "variant").isNull()
-                    cond = present & _safe(missing)
+                    cond = present & safe(is_obj & trig & self._child(val, name).isNull())
                     dr_conds.append((cond, name))
                     valids.append(~cond)
             if dr_conds:
-                any_cond = dr_conds[0][0]
-                for c, _n in dr_conds[1:]:
-                    any_cond = any_cond | c
-                joined = F.concat_ws(", ", *[F.when(c, F.lit(n)) for c, n in dr_conds])
                 parts.append(
-                    _cond_violation(
-                        _safe(any_cond), path, "dependentRequired",
-                        "dependent_property_required", {"missing_properties": joined},
+                    joined_violation(
+                        dr_conds, path, "dependentRequired",
+                        "dependent_property_required", "missing_properties",
                     )
                 )
 
         if "properties" in s and isinstance(s["properties"], dict):
             prop_conds = []
             for name, sub in s["properties"].items():
-                child = F.try_variant_get(v, f"$['{name}']", "variant")
-                cpath = F.concat(path, F.lit("/" + name.replace("~", "~0").replace("/", "~1")))
-                node = self._compile(sub, child, cpath, depth + 1)
-                if self._stages is not None and not self._in_lambda:
-                    viols = self._maybe_stage(node.violations)
-                    gated_invalid = present & is_obj & _safe(F.size(viols) > 0)
-                    parts.append(F.when(present & is_obj, viols).otherwise(_empty_violations()))
+                child = Val(self._child(val, name), F.concat(path, F.lit("/" + escape_token(name))),
+                            in_lambda=val.in_lambda)
+                node = self._compile(sub, child, depth + 1)
+                if self._stages is not None and not val.in_lambda:
+                    # evaluate each property's checks ONCE: the staged
+                    # violations feed leafs, validity AND the summary flag
+                    viols = self._maybe_stage(node.violations, val)
+                    gated_invalid = present & is_obj & safe(F.size(viols) > 0)
                 else:
-                    gated_invalid = present & is_obj & _safe(~node.valid)
-                    parts.append(
-                        F.when(present & is_obj, node.violations).otherwise(_empty_violations())
-                    )
+                    viols = node.violations
+                    gated_invalid = present & is_obj & safe(~node.valid)
+                parts.append(F.when(present & is_obj, viols).otherwise(empty_violations()))
                 prop_conds.append((gated_invalid, name))
                 valids.append(~gated_invalid)
             parts.append(
-                _summary_violation(
+                summary_violation(
                     prop_conds, path, "properties",
                     "property_mismatch", "properties_mismatch",
                 )
@@ -541,453 +417,138 @@ class VariantPlanCompiler:
                 "minProperties", "maxProperties", "unevaluatedProperties",
             )
         )
-        if needs_keys:
-            # stage the cast + key list: every per-key access references the
-            # STAGED map column, so the variant→map conversion happens once
-            # per row instead of once per key reference
-            m = self._maybe_stage(v.try_cast("map<string,variant>"))
-            keys = self._maybe_stage(F.map_keys(m))
-            obj = present & is_obj & m.isNotNull()
+        if not needs_keys:
+            return
+        # stage the cast + key list: every per-key access references the
+        # STAGED map column, so the variant→map conversion happens once
+        # per row instead of once per key reference
+        m = self._maybe_stage(v.try_cast("map<string,variant>"), val)
+        keys = self._maybe_stage(F.map_keys(m), val)
+        obj = present & is_obj & m.isNotNull()
 
-            if "minProperties" in s:
-                k = int(s["minProperties"])
-                cond = obj & _safe(F.size(keys) < k)
-                parts.append(_cond_violation(cond, path, "minProperties", "too_few_properties",
-                                             {"min_properties": F.lit(k)}))
-                valids.append(~cond)
-            if "maxProperties" in s:
-                k = int(s["maxProperties"])
-                cond = obj & _safe(F.size(keys) > k)
-                parts.append(_cond_violation(cond, path, "maxProperties", "too_many_properties",
-                                             {"max_properties": F.lit(k)}))
-                valids.append(~cond)
+        def key_summary(bad: Column, keyword: str, code_single: str, code_plural: str) -> None:
+            parts.append(list_summary(obj, bad, path, keyword, code_single, code_plural))
+            valids.append(~safe(obj & (F.size(bad) > 0)))
 
-            if "propertyNames" in s and isinstance(s["propertyNames"], (dict, bool)):
-                bad = F.filter(keys, lambda k: ~_safe(self._name_valid(s["propertyNames"], k)))
-                self._dyn_summary(
-                    obj, bad, path, "propertyNames",
-                    "property_name_mismatch", "property_names_mismatch",
-                    parts, valids,
+        if "minProperties" in s:
+            k = int(s["minProperties"])
+            cond = obj & safe(F.size(keys) < k)
+            parts.append(cond_violation(cond, path, "minProperties", "too_few_properties",
+                                        {"min_properties": F.lit(k)}))
+            valids.append(~cond)
+        if "maxProperties" in s:
+            k = int(s["maxProperties"])
+            cond = obj & safe(F.size(keys) > k)
+            parts.append(cond_violation(cond, path, "maxProperties", "too_many_properties",
+                                        {"max_properties": F.lit(k)}))
+            valids.append(~cond)
+
+        if "propertyNames" in s and isinstance(s["propertyNames"], (dict, bool)):
+            bad = F.filter(keys, lambda k: ~safe(self._name_valid(s["propertyNames"], k)))
+            key_summary(bad, "propertyNames", "property_name_mismatch", "property_names_mismatch")
+
+        # Cost note (r3, measured at sf0.1 / 100k rows / 3 keys): the
+        # per-key transforms below dominate dynamic-object validation
+        # (~1.5s each standalone vs 3.2s full). Precomputing a per-object
+        # key→type map (map_from_entries of schema_of_variant per entry)
+        # is a measured DEAD END: 4 lookups/key cost 0.69s vs 0.57s for
+        # re-running schema_of_variant 4x — repeated typing is only
+        # ~0.15s of the total. The remaining cost is per-key violation
+        # construction inside interpreted HOF lambdas, intrinsic until
+        # Spark codegens higher-order functions.
+        pats = (
+            list(s["patternProperties"].items())
+            if isinstance(s.get("patternProperties"), dict)
+            else []
+        )
+        if pats:
+            pp_bad: Column | None = None
+            for pat, branch in pats:
+                matching = self._maybe_stage(F.filter(keys, lambda k: safe(k.rlike(pat))), val)
+                # ONE evaluation per key: the staged per-key violations
+                # array feeds the leafs AND the bad-key derivation
+                pv = self._maybe_stage(
+                    F.transform(matching, self._kv_violations(branch, m, path, depth)), val
                 )
-
-            # Cost note (r3, measured at sf0.1 / 100k rows / 3 keys): the
-            # per-key transforms below dominate dynamic-object validation
-            # (~1.5s each standalone vs 3.2s full). Precomputing a per-object
-            # key→type map (map_from_entries of schema_of_variant per entry)
-            # is a measured DEAD END: 4 lookups/key cost 0.69s vs 0.57s for
-            # re-running schema_of_variant 4x — repeated typing is only
-            # ~0.15s of the total. The remaining cost is per-key violation
-            # construction inside interpreted HOF lambdas, intrinsic until
-            # Spark codegens higher-order functions.
-            pats = (
-                list(s["patternProperties"].items())
-                if isinstance(s.get("patternProperties"), dict)
-                else []
+                parts.append(F.when(obj, F.flatten(pv)).otherwise(empty_violations()))
+                bad_k = F.filter(
+                    F.zip_with(matching, pv, lambda k, a: F.when(F.size(a) > 0, k)),
+                    lambda x: x.isNotNull(),
+                )
+                pp_bad = bad_k if pp_bad is None else F.concat(pp_bad, bad_k)
+            key_summary(
+                F.array_distinct(pp_bad), "patternProperties",
+                "pattern_property_mismatch", "pattern_properties_mismatch",
             )
-            if pats:
-                pp_bad: Column | None = None
-                for pat, branch in pats:
-                    matching = self._maybe_stage(F.filter(keys, lambda k: _safe(k.rlike(pat))))
-                    # ONE evaluation per key: the staged per-key violations
-                    # array feeds the leafs AND the bad-key derivation
-                    pv = self._maybe_stage(
-                        F.transform(matching, self._kv_violations(branch, m, path, depth))
-                    )
-                    parts.append(F.when(obj, F.flatten(pv)).otherwise(_empty_violations()))
-                    bad_k = F.filter(
-                        F.zip_with(matching, pv, lambda k, a: F.when(F.size(a) > 0, k)),
-                        lambda x: x.isNotNull(),
-                    )
-                    pp_bad = bad_k if pp_bad is None else F.concat(pp_bad, bad_k)
-                self._dyn_summary(
-                    obj, F.array_distinct(pp_bad), path, "patternProperties",
-                    "pattern_property_mismatch", "pattern_properties_mismatch",
-                    parts, valids,
-                )
 
-            if "additionalProperties" in s and isinstance(s["additionalProperties"], (dict, bool)):
-                declared = list(s.get("properties", {}) or {})
-                extra = F.filter(
-                    keys,
-                    lambda k: ~k.isin(*declared) if declared else F.lit(True),
-                )
-                for pat, _b in pats:
-                    extra = F.filter(extra, lambda k: ~_safe(k.rlike(pat)))
-                self._extra_keys_kw(
-                    s["additionalProperties"], m, extra, obj, path, parts, valids, depth,
-                    "additionalProperties",
-                    "additional_property_mismatch", "additional_properties_mismatch",
-                )
-
-            if "unevaluatedProperties" in s and isinstance(s["unevaluatedProperties"], (dict, bool)):
-                claimed = self._static_claims(s)
-                if not claimed["all"]:
-                    # runtime-conditional claims (anyOf/oneOf/if/dependentSchemas
-                    # branches, to ANY nesting depth — annotations flow only
-                    # from applying, succeeding branches): each source's
-                    # compound gate is STAGED once, then referenced per key
-                    cond_claims = []
-                    for cond, bnames, bpats, ball in self._conditional_claims(
-                        s, v, path, depth
-                    ):
-                        if self._stages is not None and not self._in_lambda:
-                            cond = self._maybe_stage(cond)
-                        cond_claims.append((cond, bnames, bpats, ball))
-
-                    def unclaimed_pred(k: Column) -> Column:
-                        p = F.lit(False)
-                        if claimed["names"]:
-                            p = p | k.isin(*claimed["names"])
-                        for pat in claimed["patterns"]:
-                            p = p | _safe(k.rlike(pat))
-                        for cond, bnames, bpats, ball in cond_claims:
-                            cp = F.lit(True) if ball else F.lit(False)
-                            if not ball:
-                                if bnames:
-                                    cp = cp | k.isin(*bnames)
-                                for pat in bpats:
-                                    cp = cp | _safe(k.rlike(pat))
-                            p = p | (cond & cp)
-                        return ~_safe(p)
-
-                    unclaimed = F.filter(keys, unclaimed_pred)
-                    self._extra_keys_kw(
-                        s["unevaluatedProperties"], m, unclaimed, obj, path, parts, valids, depth,
-                        "unevaluatedProperties",
-                        "unevaluated_property_mismatch", "unevaluated_properties_mismatch",
-                    )
-
-        if "dependentSchemas" in s and isinstance(s["dependentSchemas"], dict):
-            ds_bad: list[tuple[Column, str]] = []
-            for name, branch in s["dependentSchemas"].items():
-                have = present & is_obj & F.try_variant_get(v, f"$['{name}']", "variant").isNotNull()
-                node = self._compile(branch, v, path, depth + 1)
-                parts.append(F.when(_safe(have), node.violations).otherwise(_empty_violations()))
-                cond = _safe(have & ~node.valid)
-                ds_bad.append((cond, name))
-                valids.append(~cond)
-            if ds_bad:
-                cnt = ds_bad[0][0].cast("int")
-                for c, _n in ds_bad[1:]:
-                    cnt = cnt + c.cast("int")
-                whens = [F.when(c, F.lit(n)) for c, n in ds_bad]
-                first = F.coalesce(*whens, F.lit("")) if len(whens) > 1 else F.coalesce(whens[0], F.lit(""))
-                joined = F.array_join(
-                    F.array_sort(F.filter(F.array(*whens), lambda x: x.isNotNull())), ", "
-                )
-                parts.append(
-                    F.when(cnt == 1, _cond_violation(
-                        F.lit(True), path, "dependentSchemas", "dependent_schema_mismatch",
-                        {"property": first}))
-                    .when(cnt > 1, _cond_violation(
-                        F.lit(True), path, "dependentSchemas", "dependent_schemas_mismatch",
-                        {"properties": joined}))
-                    .otherwise(_empty_violations())
-                )
-
-    def _conditional_claims(
-        self, s: dict, v: Column, path: Column, depth: int
-    ) -> list:
-        """Runtime-gated claim sources for unevaluatedProperties, to ANY
-        conditional nesting depth: (gate Column, names, patterns, all).
-
-        Annotation threading (reference: unevaluated_properties.go:17-69;
-        scalar: evaluator.py merge_annotations sites): claims from a
-        conditional branch count only while the branch APPLIES AND SUCCEEDS,
-        so a claim nested N conditionals deep carries the conjunction of all
-        N branch-validity gates. Gates compile once per source and the caller
-        stages them; claims within one branch's in-place tree (allOf/$ref)
-        stay unconditional inside that branch, matching the static-claims
-        treatment at the top level."""
-
-        def info(b: Any) -> tuple[list, list, bool, list]:
-            """Unconditional claims of b's in-place tree + the conditional
-            subtrees found there (handled recursively by the caller)."""
-            names: list[str] = []
-            pats: list[str] = []
-            ball = False
-            conds: list[tuple[str, Any]] = []
-            seen: set[int] = set()
-
-            def walk(sub: Any) -> None:
-                nonlocal ball
-                if not isinstance(sub, dict) or id(sub) in seen:
-                    return
-                seen.add(id(sub))
-                if "$ref" in sub and isinstance(sub["$ref"], str):
-                    try:
-                        tgt, _ = self.registry.resolve_ref(sub["$ref"], sub, "")
-                    except Exception:
-                        tgt = None
-                    walk(tgt)
-                if isinstance(sub.get("properties"), dict):
-                    names.extend(sub["properties"])
-                if isinstance(sub.get("patternProperties"), dict):
-                    pats.extend(sub["patternProperties"])
-                if "additionalProperties" in sub or "unevaluatedProperties" in sub:
-                    ball = True
-                for bb in sub.get("allOf") or []:
-                    walk(bb)
-                for kw in ("anyOf", "oneOf"):
-                    if isinstance(sub.get(kw), list):
-                        conds.append((kw, sub[kw]))
-                if "if" in sub:
-                    conds.append(("if", sub))
-                if isinstance(sub.get("dependentSchemas"), dict):
-                    conds.append(("dep", sub["dependentSchemas"]))
-
-            walk(b)
-            return names, pats, ball, conds
-
-        out: list = []
-
-        def gated(gate: Column | None, cond: Column) -> Column:
-            return _safe(cond) if gate is None else _safe(gate & cond)
-
-        def emit(b: Any, gate: Column | None) -> None:
-            names, pats, ball, conds = info(b)
-            g = gated(gate, self._compile(b, v, path, depth + 1).valid)
-            if names or pats or ball:
-                out.append((g, names, pats, ball))
-            handle(conds, g)
-
-        def handle(conds: list, gate: Column | None) -> None:
-            for kind, payload in conds:
-                if kind == "anyOf":
-                    # every PASSING branch's annotations merge (evaluator.py
-                    # anyOf) — emit() adds each branch's own validity gate
-                    for bb in payload:
-                        emit(bb, gate)
-                elif kind == "oneOf":
-                    # scalar merges the winner only when EXACTLY one matches
-                    valids = [
-                        _safe(self._compile(bb, v, path, depth + 1).valid)
-                        for bb in payload
-                    ]
-                    cnt = valids[0].cast("int")
-                    for vv in valids[1:]:
-                        cnt = cnt + vv.cast("int")
-                    one = cnt == 1
-                    for bb in payload:
-                        emit(bb, gated(gate, one))
-                elif kind == "if":
-                    sub = payload
-                    ifvalid = self._compile(sub["if"], v, path, depth + 1).valid
-                    # if's own claims flow iff it succeeds (emit gates on its
-                    # validity); then iff if AND then succeed; else iff if
-                    # fails AND else succeeds
-                    emit(sub["if"], gate)
-                    if isinstance(sub.get("then"), dict):
-                        emit(sub["then"], gated(gate, ifvalid))
-                    if isinstance(sub.get("else"), dict):
-                        emit(sub["else"], gated(gate, ~_safe(ifvalid)))
-                elif kind == "dep":
-                    for key, bb in payload.items():
-                        have = F.try_variant_get(v, f"$['{key}']", "variant").isNotNull()
-                        emit(bb, gated(gate, have))
-
-        _, _, _, top_conds = info(s)  # top-level statics live in _static_claims
-        handle(top_conds, None)
-        return out
-
-    def _conditional_item_claims(
-        self, s: dict, v: Column, path: Column, depth: int
-    ) -> list:
-        """Item-claim sources for unevaluatedItems, mirroring the scalar's
-        evaluated_items annotation flow (evaluator.py:606-641 claim sites,
-        merge_annotations gating): returns (gate Column | None,
-        prefix_len, all_items, contains_schemas) — gate None means the
-        source is unconditional (allOf children of the same in-place tree,
-        matching the props path's static-claims treatment); conditional
-        branches carry their compound validity gates."""
-
-        def info(b: Any, is_root: bool = False):
-            L = 0
-            allb = False
-            cons: list[Any] = []
-            conds: list[tuple[str, Any]] = []
-            seen: set[int] = set()
-
-            def walk(sub: Any, root: bool = False) -> None:
-                nonlocal L, allb
-                if not isinstance(sub, dict) or id(sub) in seen:
-                    return
-                seen.add(id(sub))
-                if "$ref" in sub and isinstance(sub["$ref"], str):
-                    try:
-                        tgt, _ = self.registry.resolve_ref(sub["$ref"], sub, "")
-                    except Exception:
-                        tgt = None
-                    walk(tgt)
-                if not root:
-                    # the root's own prefixItems/contains claims are applied
-                    # directly by the unevaluatedItems block; its own
-                    # unevaluatedItems must not claim for itself
-                    if isinstance(sub.get("prefixItems"), list):
-                        L = max(L, len(sub["prefixItems"]))
-                    if isinstance(sub.get("items"), (dict, bool)):
-                        allb = True
-                    if "unevaluatedItems" in sub:
-                        allb = True  # a nested one evaluates every index
-                    if isinstance(sub.get("contains"), (dict, bool)):
-                        cons.append(sub["contains"])
-                for bb in sub.get("allOf") or []:
-                    walk(bb)
-                for kw in ("anyOf", "oneOf"):
-                    if isinstance(sub.get(kw), list):
-                        conds.append((kw, sub[kw]))
-                if "if" in sub:
-                    conds.append(("if", sub))
-                if isinstance(sub.get("dependentSchemas"), dict):
-                    conds.append(("dep", sub["dependentSchemas"]))
-
-            walk(b, root=is_root)
-            return L, allb, cons, conds
-
-        out: list = []
-
-        def gated(gate: Column | None, cond: Column) -> Column:
-            return _safe(cond) if gate is None else _safe(gate & cond)
-
-        def emit(b: Any, gate: Column | None) -> None:
-            L, allb, cons, conds = info(b)
-            g = gated(gate, self._compile(b, v, path, depth + 1).valid)
-            if L or allb or cons:
-                out.append((g, L, allb, cons))
-            handle(conds, g)
-
-        def handle(conds: list, gate: Column | None) -> None:
-            for kind, payload in conds:
-                if kind == "anyOf":
-                    for bb in payload:
-                        emit(bb, gate)
-                elif kind == "oneOf":
-                    valids = [
-                        _safe(self._compile(bb, v, path, depth + 1).valid)
-                        for bb in payload
-                    ]
-                    cnt = valids[0].cast("int")
-                    for vv in valids[1:]:
-                        cnt = cnt + vv.cast("int")
-                    one = cnt == 1
-                    for bb in payload:
-                        emit(bb, gated(gate, one))
-                elif kind == "if":
-                    sub = payload
-                    ifvalid = self._compile(sub["if"], v, path, depth + 1).valid
-                    emit(sub["if"], gate)
-                    if isinstance(sub.get("then"), dict):
-                        emit(sub["then"], gated(gate, ifvalid))
-                    if isinstance(sub.get("else"), dict):
-                        emit(sub["else"], gated(gate, ~_safe(ifvalid)))
-                elif kind == "dep":
-                    for key, bb in payload.items():
-                        have = F.try_variant_get(v, f"$['{key}']", "variant").isNotNull()
-                        emit(bb, gated(gate, have))
-
-        L0, a0, c0, top_conds = info(s, is_root=True)
-        if L0 or a0 or c0:
-            out.append((None, L0, a0, c0))  # unconditional allOf-child claims
-        handle(top_conds, None)
-        return out
-
-    def _static_claims(self, s: dict) -> dict:
-        """Statically-claimed key names + patterns for unevaluatedProperties
-        (properties/patternProperties/additionalProperties here and in allOf
-        children; conditional branches are refused at _check_supported).
-        `all` is True when an additionalProperties anywhere in the in-place
-        tree evaluates every remaining key (scalar core marks them all
-        evaluated regardless of the branch verdict — evaluator.py:634)."""
-        names: list[str] = []
-        patterns: list[str] = []
-        all_claimed = False
-
-        def walk(sub: Any, is_root: bool = False) -> None:
-            nonlocal all_claimed
-            if not isinstance(sub, dict):
+        def extra_keys(branch: Any, extra: Column, keyword: str, code_single: str, code_plural: str) -> None:
+            """Apply a subschema (or False) to dynamically-enumerated extra
+            keys: per-key leaf violations at the child path + ONE
+            singular/plural summary (scalar-core emission shape)."""
+            if branch is True or branch == {}:
                 return
-            if isinstance(sub.get("properties"), dict):
-                names.extend(sub["properties"])
-            if isinstance(sub.get("patternProperties"), dict):
-                patterns.extend(sub["patternProperties"])
-            if "additionalProperties" in sub:
-                all_claimed = True
-            if not is_root and "unevaluatedProperties" in sub:
-                # a nested unevaluatedProperties evaluates every key in its
-                # scope, so the outer one sees them all as claimed
-                all_claimed = True
-            for b in sub.get("allOf") or []:
-                walk(b)
+            extra = self._maybe_stage(extra, val)
+            if branch is False:
+                leafs = F.transform(
+                    extra,
+                    lambda k: mk_violation(
+                        F.concat(path, F.lit("/"), _esc_key(k)), "schema", "false_schema_mismatch"
+                    ),
+                )
+                parts.append(F.when(obj, leafs).otherwise(empty_violations()))
+                bad = extra
+            else:
+                pv = self._maybe_stage(
+                    F.transform(extra, self._kv_violations(branch, m, path, depth)), val
+                )
+                parts.append(F.when(obj, F.flatten(pv)).otherwise(empty_violations()))
+                bad = F.filter(
+                    F.zip_with(extra, pv, lambda k, a: F.when(F.size(a) > 0, k)),
+                    lambda x: x.isNotNull(),
+                )
+            key_summary(bad, keyword, code_single, code_plural)
 
-        walk(s, is_root=True)
-        return {"names": sorted(set(names)), "patterns": patterns, "all": all_claimed}
+        if "additionalProperties" in s and isinstance(s["additionalProperties"], (dict, bool)):
+            declared = list(s.get("properties", {}) or {})
+            extra = F.filter(
+                keys,
+                lambda k: ~k.isin(*declared) if declared else F.lit(True),
+            )
+            for pat, _b in pats:
+                extra = F.filter(extra, lambda k: ~safe(k.rlike(pat)))
+            extra_keys(
+                s["additionalProperties"], extra, "additionalProperties",
+                "additional_property_mismatch", "additional_properties_mismatch",
+            )
+
+        if "unevaluatedProperties" in s and isinstance(s["unevaluatedProperties"], (dict, bool)):
+            sources = self._claims(s, val, depth, "Properties")
+            if not self._evaluates_all(sources):
+
+                def unclaimed(k: Column) -> Column:
+                    claimed = F.lit(False)
+                    for gate, c in sources:
+                        cp = F.lit(c.every)
+                        if c.names:
+                            cp = cp | k.isin(*sorted(set(c.names)))
+                        for pat in c.patterns:
+                            cp = cp | safe(k.rlike(pat))
+                        claimed = claimed | (cp if gate is None else (gate & cp))
+                    return ~safe(claimed)
+
+                extra_keys(
+                    s["unevaluatedProperties"], F.filter(keys, unclaimed), "unevaluatedProperties",
+                    "unevaluated_property_mismatch", "unevaluated_properties_mismatch",
+                )
 
     def _kv_violations(self, branch, m: Column, path: Column, depth: int):
-        """Per-key violations lambda (marks nested compiles non-stageable)."""
+        """Per-key violations lambda (nested compiles are non-stageable)."""
 
         def fn(k: Column) -> Column:
-            prev = self._in_lambda
-            self._in_lambda = True
-            try:
-                return self._compile(
-                    branch, F.element_at(m, k),
-                    F.concat(path, F.lit("/"), _esc_key(k)), depth + 1,
-                ).violations
-            finally:
-                self._in_lambda = prev
+            child = Val(F.element_at(m, k), F.concat(path, F.lit("/"), _esc_key(k)), in_lambda=True)
+            return self._compile(branch, child, depth + 1).violations
 
         return fn
-
-    def _extra_keys_kw(
-        self, branch, m: Column, extra: Column, obj: Column, path: Column,
-        parts, valids, depth: int, keyword: str, code_single: str, code_plural: str,
-    ) -> None:
-        """Apply a subschema (or False) to dynamically-enumerated extra keys:
-        per-key leaf violations at the child path + ONE singular/plural
-        summary (scalar-core emission shape)."""
-        if branch is True or branch == {}:
-            return
-        extra = self._maybe_stage(extra)
-        if branch is False:
-            leafs = F.transform(
-                extra,
-                lambda k: F.struct(
-                    F.concat(path, F.lit("/"), _esc_key(k)).alias("instance_path"),
-                    F.lit("schema").alias("keyword"),
-                    F.lit("false_schema_mismatch").alias("code"),
-                    F.expr("CAST(map() AS map<string,string>)").alias("params"),
-                ),
-            )
-            parts.append(F.when(obj, leafs).otherwise(_empty_violations()))
-            bad = extra
-        else:
-            pv = self._maybe_stage(F.transform(extra, self._kv_violations(branch, m, path, depth)))
-            parts.append(F.when(obj, F.flatten(pv)).otherwise(_empty_violations()))
-            bad = F.filter(
-                F.zip_with(extra, pv, lambda k, a: F.when(F.size(a) > 0, k)),
-                lambda x: x.isNotNull(),
-            )
-        self._dyn_summary(obj, bad, path, keyword, code_single, code_plural, parts, valids)
-
-    def _dyn_summary(
-        self, obj: Column, bad: Column, path: Column, keyword: str,
-        code_single: str, code_plural: str, parts, valids,
-    ) -> None:
-        nbad = F.size(bad)
-        parts.append(
-            F.when(
-                _safe(obj & (nbad == 1)),
-                _cond_violation(F.lit(True), path, keyword, code_single,
-                                {"property": F.element_at(bad, 1)}),
-            )
-            .when(
-                _safe(obj & (nbad > 1)),
-                _cond_violation(F.lit(True), path, keyword, code_plural,
-                                {"properties": F.array_join(F.array_sort(bad), ", ")}),
-            )
-            .otherwise(_empty_violations())
-        )
-        valids.append(~_safe(obj & (nbad > 0)))
 
     def _name_valid(self, sub: Any, k: Column) -> Column:
         """propertyNames subschema as a predicate over the key string."""
@@ -1001,7 +562,7 @@ class VariantPlanCompiler:
             # keys are always strings; any other required type never matches
             ok = ok & F.lit("string" in t if isinstance(t, list) else False)
         if isinstance(sub.get("pattern"), str):
-            ok = ok & _safe(k.rlike(sub["pattern"]))
+            ok = ok & safe(k.rlike(sub["pattern"]))
         if "minLength" in sub:
             ok = ok & (F.length(k) >= int(sub["minLength"]))
         if "maxLength" in sub:
@@ -1014,276 +575,110 @@ class VariantPlanCompiler:
         if isinstance(sub.get("format"), str) and self.assert_format:
             rx = SPARK_REGEX_FORMATS.get(sub["format"])
             if rx is not None:
-                ok = ok & _safe(k.rlike(rx))
+                ok = ok & safe(k.rlike(rx))
         return ok
 
     # ----------------------------------------------------------------- arrays
 
-    def _array_kw(self, s: dict, v: Column, t: Column, path: Column, parts, valids, present: Column, depth: int) -> None:
-        is_arr = t.startswith("ARRAY")
-        arr = F.try_variant_get(v, "$", "array<variant>")
+    def _array_kw(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
+        path = val.path
+        is_arr = val.dtype.startswith("ARRAY")
+        arr = F.try_variant_get(val.col, "$", "array<variant>")
         n = F.size(arr)
+        gate = safe(present & is_arr)
 
         def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = present & is_arr & _safe(cond)
-            parts.append(_cond_violation(cond, path, keyword, code, params))
+            cond = present & is_arr & safe(cond)
+            parts.append(cond_violation(cond, path, keyword, code, params))
             valids.append(~cond)
 
         if "minItems" in s:
             add(n < int(s["minItems"]), "minItems", "items_too_short",
-                {"min_items": F.lit(int(s["minItems"])), "size": n})
+                {"min_items": F.lit(int(s["minItems"]))})
         if "maxItems" in s:
             add(n > int(s["maxItems"]), "maxItems", "items_too_long",
-                {"max_items": F.lit(int(s["maxItems"])), "size": n})
+                {"max_items": F.lit(int(s["maxItems"]))})
         if s.get("uniqueItems") is True:
             canon = F.transform(arr, lambda x: F.to_json(x))
-            add(F.size(F.array_distinct(canon)) != n, "uniqueItems", "unique_items_mismatch")
+            # index groups of equal elements, first-occurrence order, as the
+            # scalar core prints them: "(0, 2); (1, 3)"
+            groups = F.filter(
+                F.transform(
+                    F.array_distinct(canon),
+                    lambda u: F.filter(F.sequence(F.lit(0), n - 1), lambda i: F.element_at(canon, i + 1) == u),
+                ),
+                lambda g: F.size(g) > 1,
+            )
+            dups = F.array_join(
+                F.transform(groups, lambda g: F.concat(F.lit("("), F.array_join(g.cast("array<string>"), ", "), F.lit(")"))),
+                "; ",
+            )
+            add(F.size(F.array_distinct(canon)) != n, "uniqueItems", "unique_items_mismatch",
+                {"duplicates": dups})
 
         prefix = s.get("prefixItems") if isinstance(s.get("prefixItems"), list) else []
         pi_conds = []
         for i, sub in enumerate(prefix):
-            child = F.try_variant_get(v, f"$[{i}]", "variant")
-            node = self._compile(sub, child, F.concat(path, F.lit(f"/{i}")), depth + 1)
-            gated_invalid = present & is_arr & (n > i) & _safe(~node.valid)
-            parts.append(
-                F.when(present & is_arr & (n > i), node.violations).otherwise(_empty_violations())
-            )
+            child = Val(F.try_variant_get(val.col, f"$[{i}]", "variant"), F.concat(path, F.lit(f"/{i}")),
+                        in_lambda=val.in_lambda)
+            node = self._compile(sub, child, depth + 1)
+            applies = present & is_arr & (n > i)
+            gated_invalid = applies & safe(~node.valid)
+            parts.append(F.when(applies, node.violations).otherwise(empty_violations()))
             valids.append(~gated_invalid)
             pi_conds.append((gated_invalid, i))
         parts.append(
-            _summary_violation(
+            summary_violation(
                 pi_conds, path, "prefixItems",
                 "prefix_item_mismatch", "prefix_items_mismatch",
                 param_single="index", param_plural="indexs", sort_plural=False,
             )
         )
 
-        if "items" in s and isinstance(s["items"], (dict, bool)):
-            # per-element recursion via transform + flatten; paths /<i>
-            def elem_violations(x: Column, i: Column) -> Column:
-                prev = self._in_lambda
-                self._in_lambda = True
-                try:
-                    node = self._compile(
-                        s["items"], x, F.concat(path, F.lit("/"), i.cast("string")), depth + 1
-                    )
-                finally:
-                    self._in_lambda = prev
-                return node.violations
+        def elem(x: Column, i: Column) -> Val:
+            return Val(x, F.concat(path, F.lit("/"), i.cast("string")), in_lambda=True)
 
-            rest = F.when(n > len(prefix), F.slice(arr, len(prefix) + 1, n)).otherwise(
-                F.array().cast("array<variant>")
-            )
-            # ONE evaluation per element (staged): leafs + the scalar-parity
-            # item(s)_mismatch summary both derive from the per-element arrays
-            pev = self._maybe_stage(
-                F.when(
-                    _safe(present & is_arr),
-                    F.zip_with(
-                        rest,
-                        F.sequence(F.lit(len(prefix)), F.greatest(n - 1, F.lit(len(prefix)))),
-                        lambda x, i: elem_violations(x, i),
-                    ),
-                ).otherwise(F.expr(f"CAST(array() AS array<{_VIOL_ARR_DDL}>)"))
-            )
-            all_viol = F.flatten(pev)
-            cond_any = present & is_arr & (F.size(all_viol) > 0)
-            parts.append(F.when(_safe(cond_any), all_viol).otherwise(_empty_violations()))
-            bad_idx = F.filter(
-                F.transform(pev, lambda a, i: F.when(F.size(a) > 0, i + len(prefix))),
-                lambda x: x.isNotNull(),
-            )
-            nbad = F.size(bad_idx)
-            parts.append(
-                F.when(
-                    _safe(present & is_arr & (nbad == 1)),
-                    _cond_violation(F.lit(True), path, "items", "item_mismatch",
-                                    {"index": F.element_at(bad_idx, 1)}),
-                )
-                .when(
-                    _safe(present & is_arr & (nbad > 1)),
-                    _cond_violation(F.lit(True), path, "items", "items_mismatch",
-                                    {"indexs": F.array_join(
-                                        F.transform(bad_idx, lambda x: x.cast("string")), ", ")}),
-                )
-                .otherwise(_empty_violations())
-            )
-            valids.append(~_safe(cond_any))
+        if "items" in s and isinstance(s["items"], (dict, bool)):
+            # per-element recursion via transform + flatten; ONE evaluation
+            # per element (staged): leafs + the item(s)_mismatch summary
+            def elem_violations(x: Column, i: Column) -> Column:
+                viols = self._compile(s["items"], elem(x, i), depth + 1).violations
+                return F.when(i >= len(prefix), viols).otherwise(empty_violations()) if prefix else viols
+
+            pev = self._maybe_stage(F.transform(arr, elem_violations), val)
+            element_summary(gate, pev, path, "items", "item_mismatch", "items_mismatch", parts, valids)
 
         if "contains" in s and isinstance(s["contains"], (dict, bool)):
             def elem_valid(x: Column) -> Column:
-                prev = self._in_lambda
-                self._in_lambda = True
-                try:
-                    return self._compile(s["contains"], x, F.lit(""), depth + 1).valid
-                finally:
-                    self._in_lambda = prev
+                return self._compile(s["contains"], Val(x, F.lit(""), in_lambda=True), depth + 1).valid
 
             n_match = F.size(F.filter(arr, elem_valid))
             min_c = int(s.get("minContains", 1))
             max_c = s.get("maxContains")
             if min_c > 0:
                 add(n_match < min_c, "contains", "contains_too_few_items",
-                    {"min_contains": F.lit(min_c), "matches": n_match})
+                    {"min_contains": F.lit(min_c)})
             if max_c is not None:
                 add(n_match > int(max_c), "maxContains", "contains_too_many_items",
-                    {"max_contains": F.lit(int(max_c)), "matches": n_match})
+                    {"max_contains": F.lit(int(max_c))})
 
-        if (
-            "unevaluatedItems" in s
-            and isinstance(s["unevaluatedItems"], (dict, bool))
-            and not isinstance(s.get("items"), (dict, bool))
-            and s["unevaluatedItems"] is not True
-            and s["unevaluatedItems"] != {}
-        ):
-            # static resolution (items present would evaluate everything):
-            # evaluated = prefixItems indices + contains matches + gated claims from
-            # in-place applicators (allOf/anyOf/oneOf/if/dependentSchemas —
-            # _conditional_item_claims threads the annotation flow; gates
-            # compile once, staged, referenced per element)
+        if "unevaluatedItems" in s and isinstance(s["unevaluatedItems"], (dict, bool)):
             branch = s["unevaluatedItems"]
-            contains_schema = s.get("contains") if isinstance(s.get("contains"), (dict, bool)) else None
-            claim_sources = []
-            for gate, cl_len, cl_all, cl_cons in self._conditional_item_claims(
-                s, v, path, depth
-            ):
-                if (
-                    gate is not None
-                    and self._stages is not None
-                    and not self._in_lambda
-                ):
-                    gate = self._maybe_stage(gate)
-                claim_sources.append((gate, cl_len, cl_all, cl_cons))
+            sources = self._claims(s, val, depth, "Items")
+            if branch is not True and branch != {} and not self._evaluates_all(sources):
 
-            def uneval_viol(x: Column, i: Column) -> Column:
-                prev = self._in_lambda
-                self._in_lambda = True
-                try:
-                    evaluated = i < len(prefix)
-                    if contains_schema is not None:
-                        evaluated = evaluated | _safe(
-                            self._compile(contains_schema, x, F.lit(""), depth + 1).valid
-                        )
-                    for gate, cl_len, cl_all, cl_cons in claim_sources:
-                        claim = F.lit(True) if cl_all else F.lit(False)
-                        if not cl_all:
-                            if cl_len:
-                                claim = claim | (i < cl_len)
-                            for cs in cl_cons:
-                                claim = claim | _safe(
-                                    self._compile(cs, x, F.lit(""), depth + 1).valid
-                                )
-                        evaluated = evaluated | (
-                            _safe(claim) if gate is None else _safe(gate & claim)
-                        )
-                    child_path = F.concat(path, F.lit("/"), i.cast("string"))
-                    if branch is False:
-                        vcol = _cond_violation(
-                            F.lit(True), child_path, "schema", "false_schema_mismatch"
-                        )
-                    else:
-                        vcol = self._compile(branch, x, child_path, depth + 1).violations
-                finally:
-                    self._in_lambda = prev
-                return F.when(x.isNotNull() & ~_safe(evaluated), vcol).otherwise(
-                    _empty_violations()
+                def uneval_viol(x: Column, i: Column) -> Column:
+                    x_val = elem(x, i)
+                    evaluated = self._item_claimed(sources, x_val, i, depth)
+                    return F.when(x.isNotNull() & ~safe(evaluated),
+                                  self._compile(branch, x_val, depth + 1).violations
+                                  ).otherwise(empty_violations())
+
+                pev = self._maybe_stage(F.transform(arr, uneval_viol), val)
+                element_summary(
+                    gate, pev, path, "unevaluatedItems",
+                    "unevaluated_item_mismatch", "unevaluated_items_mismatch", parts, valids,
                 )
-
-            pev = self._maybe_stage(
-                F.when(
-                    _safe(present & is_arr & (n > 0)),
-                    F.zip_with(arr, F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0))), uneval_viol),
-                ).otherwise(F.expr(f"CAST(array() AS array<{_VIOL_ARR_DDL}>)"))
-            )
-            leafs = F.flatten(pev)
-            parts.append(F.when(_safe(present & is_arr), leafs).otherwise(_empty_violations()))
-            bad_idx = F.filter(
-                F.transform(pev, lambda a, i: F.when(F.size(a) > 0, i)),
-                lambda x: x.isNotNull(),
-            )
-            nbad = F.size(bad_idx)
-            parts.append(
-                F.when(
-                    _safe(present & is_arr & (nbad == 1)),
-                    _cond_violation(F.lit(True), path, "unevaluatedItems",
-                                    "unevaluated_item_mismatch",
-                                    {"index": F.element_at(bad_idx, 1)}),
-                )
-                .when(
-                    _safe(present & is_arr & (nbad > 1)),
-                    _cond_violation(F.lit(True), path, "unevaluatedItems",
-                                    "unevaluated_items_mismatch",
-                                    {"indexs": F.array_join(
-                                        F.transform(bad_idx, lambda x: x.cast("string")), ", ")}),
-                )
-                .otherwise(_empty_violations())
-            )
-            valids.append(~_safe(present & is_arr & (F.size(leafs) > 0)))
-
-    # ---------------------------------------------------------------- logical
-
-    def _logical_kw(self, s: dict, v: Column, path: Column, parts, valids, present: Column, depth: int) -> None:
-        if "allOf" in s and isinstance(s["allOf"], list):
-            ao_conds = []
-            for i, sub in enumerate(s["allOf"]):
-                node = self._compile(sub, v, path, depth + 1)
-                cond = present & _safe(~node.valid)
-                parts.append(F.when(present, node.violations).otherwise(_empty_violations()))
-                valids.append(~cond)
-                ao_conds.append((cond, i))
-            if ao_conds:
-                any_bad = ao_conds[0][0]
-                for c, _i in ao_conds[1:]:
-                    any_bad = any_bad | c
-                joined = F.concat_ws(", ", *[F.when(c, F.lit(str(i))) for c, i in ao_conds])
-                parts.append(
-                    _cond_violation(
-                        _safe(any_bad), path, "allOf", "all_of_item_mismatch",
-                        {"indexs": joined},
-                    )
-                )
-
-        if "anyOf" in s and isinstance(s["anyOf"], list):
-            ok = F.lit(False)
-            for sub in s["anyOf"]:
-                ok = ok | self._compile(sub, v, path, depth + 1).valid
-            cond = present & _safe(~ok)
-            parts.append(_cond_violation(cond, path, "anyOf", "any_of_item_mismatch"))
-            valids.append(~cond)
-
-        if "oneOf" in s and isinstance(s["oneOf"], list):
-            count = F.lit(0)
-            for sub in s["oneOf"]:
-                count = count + self._compile(sub, v, path, depth + 1).valid.cast("int")
-            none_cond = present & _safe(count == 0)
-            multi_cond = present & _safe(count > 1)
-            parts.append(_cond_violation(none_cond, path, "oneOf", "one_of_item_mismatch"))
-            parts.append(_cond_violation(multi_cond, path, "oneOf", "one_of_multiple_matches",
-                                         {"matches": count.cast("string")}))
-            valids.append(~none_cond & ~multi_cond)
-
-        if "not" in s:
-            node = self._compile(s["not"], v, path, depth + 1)
-            cond = present & _safe(node.valid)
-            parts.append(_cond_violation(cond, path, "not", "not_schema_mismatch"))
-            valids.append(~cond)
-
-        if "if" in s:
-            if_valid = self._compile(s["if"], v, path, depth + 1).valid
-            then_node = self._compile(s.get("then", True), v, path, depth + 1)
-            else_node = self._compile(s.get("else", True), v, path, depth + 1)
-            then_bad = present & _safe(if_valid & ~then_node.valid)
-            else_bad = present & _safe(~_safe(if_valid) & ~else_node.valid)
-            parts.append(
-                F.when(present & _safe(if_valid), then_node.violations)
-                .when(present, else_node.violations)
-                .otherwise(_empty_violations())
-            )
-            if "then" in s:
-                parts.append(_cond_violation(then_bad, path, "then", "if_then_mismatch"))
-            if "else" in s:
-                parts.append(_cond_violation(else_bad, path, "else", "if_else_mismatch"))
-            valids.append(~(then_bad | else_bad))
 
 
 _PLAN_CACHE: dict = {}
@@ -1340,14 +735,12 @@ def validate_variant_column(
     v = F.col(tmp)
     parse_failed = F.col(json_col).isNotNull() & v.isNull()
     viol, stages = _compiled_variant_plan(df, schema, assert_format, max_unroll)
-    from jsonschema_spark.plans.columns import SparkPlanCompiler
-
-    staged = SparkPlanCompiler.attach_stages(staged, stages)
+    staged = PlanCompiler.attach_stages(staged, stages)
     out = staged.withColumn(
         "violations",
         F.when(
             parse_failed,
-            _cond_violation(F.lit(True), F.lit(""), "parse", "json_parse_error"),
+            cond_violation(F.lit(True), F.lit(""), "parse", "json_parse_error"),
         ).otherwise(viol),
     ).drop(tmp, *[n for n, _ in stages])
     return out.withColumn("valid", F.size("violations") == 0)

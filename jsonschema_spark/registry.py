@@ -213,10 +213,17 @@ class Registry:
             return target, self.base_of(target, res_uri or base)
         raise KeyError(f"unresolvable anchor: {absolute!r}")
 
-    def find_dynamic(self, anchor: str, scope_bases: list[str]) -> Any | None:
-        """Outermost-first search of the dynamic scope for a $dynamicAnchor."""
-        for b in scope_bases:
-            hit = self.dynamic_anchors.get((b, anchor))
-            if hit is not None:
-                return hit
-        return None
+    def resolve_dynamic(self, ref: str, current_schema: Any, scope_bases: list[str]) -> Any:
+        """Resolve a $dynamicRef under a dynamic scope (resource base URIs,
+        outermost first). A plain-name fragment whose static target carries
+        the matching $dynamicAnchor resolves to the outermost scope resource
+        declaring that anchor; everything else behaves like $ref
+        (reference: validate.go:155-177)."""
+        target, _ = self.resolve_ref(ref, current_schema, "")
+        frag = ref.split("#", 1)[1] if "#" in ref else ""
+        if frag and not frag.startswith("/") and isinstance(target, dict) and target.get("$dynamicAnchor") == frag:
+            for b in scope_bases:
+                hit = self.dynamic_anchors.get((b, frag))
+                if hit is not None:
+                    return hit
+        return target

@@ -65,7 +65,6 @@ class JobConfig:
     buckets_per_job: int = 16
     salt_partitions: int = 0  # 0 => leave partitioning to AQE
     assert_format: bool = True
-    max_violation_examples: int = 1000  # per bucket, cap the violations sample
 
 
 def _bucket_expr(cfg: JobConfig):

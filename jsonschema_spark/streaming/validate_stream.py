@@ -40,14 +40,9 @@ def validate_stream(
     continuous processing; no watermark required."""
     from jsonschema_spark.plans.columns import SparkPlanCompiler
 
-    plan = SparkPlanCompiler(schema, assert_format=assert_format)
-    stages: list = []
-    v = plan.violations_column(stream_df.schema, stages=stages)
-    out = plan.attach_stages(stream_df, stages)
-    out = out.withColumn(violations_col, v).withColumn(
-        valid_col, F.size(F.col(violations_col)) == 0
+    return SparkPlanCompiler(schema, assert_format=assert_format).apply(
+        stream_df, violations_col=violations_col, valid_col=valid_col
     )
-    return out.drop(*[n for n, _ in stages]) if stages else out
 
 
 def stream_violation_metrics(

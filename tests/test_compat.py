@@ -70,6 +70,9 @@ CASES = [
      {"type": "object", "properties": {"a": {"type": "string"}}},
      [{"a": "x"}],
      False),
+    # composite members compare by JSON equality: key order, 1 vs 1.0
+    ({"enum": [{"a": 1, "b": 2}]}, {"enum": [{"b": 2, "a": 1}]}, [{"a": 1, "b": 2}], False),
+    ({"const": [1]}, {"const": [1.0]}, [[1]], False),
 ]
 
 

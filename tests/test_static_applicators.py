@@ -41,14 +41,41 @@ CASES = [
         "properties": {"x_code": {}, "count": {}},
         "unevaluatedProperties": False,
     },
+    # claims through dependentSchemas, a nested anyOf, and an allOf prefixItems
+    {
+        "dependentSchemas": {"count": {"properties": {"other": {}}}},
+        "properties": {"x_code": {}, "count": {}, "tags": {}},
+        "unevaluatedProperties": False,
+    },
+    {
+        "anyOf": [{"anyOf": [{"properties": {"x_code": {}, "count": {}, "other": {}, "tags": {}}}]}],
+        "unevaluatedProperties": False,
+    },
+    {"properties": {"tags": {"allOf": [{"prefixItems": [{}]}], "unevaluatedItems": False}}},
+    # claims through a $dynamicRef inside the $ref target
+    {
+        "$ref": "#/$defs/x",
+        "unevaluatedProperties": False,
+        "$defs": {
+            "x": {"$dynamicRef": "#/$defs/y"},
+            "y": {"properties": {"x_code": {}, "count": {}, "tags": {}}},
+        },
+    },
+    # two matching branches: one_of_multiple_matches lists both indexes
+    {"oneOf": [{"required": ["x_code"]}, {"required": ["count"]}]},
 ]
 
 
 @pytest.fixture(scope="module")
 def obj_df(spark):
     return spark.createDataFrame(
-        [("a1", 5, "x"), (None, None, None), ("bad name", 2, None), ("a2", 99, "keep")],
-        "x_code string, count int, other string",
+        [
+            ("a1", 5, "x", [1]),
+            (None, None, None, None),
+            ("bad name", 2, None, [1, 2]),
+            ("a2", 99, "keep", [7]),
+        ],
+        "x_code string, count int, other string, tags array<int>",
     )
 
 
@@ -65,8 +92,13 @@ def test_static_applicator_matches_scalar(spark, obj_df, schema):
 def test_static_applicator_violation_rows_match_scalar(spark, obj_df, schema):
     """Violation ROWS, not just flags: (path, keyword, code) multisets must
     agree typed-planner vs scalar core (guards e.g. double-emission of
-    dependentSchemas sub-violations — reference dependent_schemas.go:17-75)."""
+    dependentSchemas sub-violations — reference dependent_schemas.go:17-75),
+    and so must the rendered (path, code, message) rows
+    (reporting.localized_output vs errors.render_message)."""
     import pyspark.sql.functions as SF
+
+    from jsonschema_spark.errors import render_message
+    from jsonschema_spark.reporting import localized_output
 
     out = validate_dataframe(obj_df, schema)
     got_rows = (
@@ -80,13 +112,18 @@ def test_static_applicator_violation_rows_match_scalar(spark, obj_df, schema):
             by_doc.setdefault(r["x_code"], []).append(
                 (r["instance_path"], r["keyword"], r["code"])
             )
+    messages: dict = {}
+    for r in localized_output(out, ["x_code"]).collect():
+        messages.setdefault(r["x_code"], []).append((r["instance_path"], r["code"], r["message"]))
     ev = Compiler().compile(schema)
     for row in obj_df.collect():
         inst = {k: v for k, v in row.asDict().items() if v is not None}
-        want = sorted(
-            (v.instance_path, v.keyword, v.code) for v in ev.validate(inst).violations
-        )
+        violations = ev.validate(inst).violations
+        want = sorted((v.instance_path, v.keyword, v.code) for v in violations)
         got = sorted(by_doc.get(row["x_code"], []))
+        assert got == want, (schema, inst, got, want)
+        want = sorted((v.instance_path, v.code, render_message(v.code, v.params)) for v in violations)
+        got = sorted(messages.get(row["x_code"], []))
         assert got == want, (schema, inst, got, want)
 
 
