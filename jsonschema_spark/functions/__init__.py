@@ -1,4 +1,1 @@
-from jsonschema_spark.functions.udf import (  # noqa: F401
-    validate_json_column,
-    valid_flag_udf,
-)
+from jsonschema_spark.functions.udf import validate_json_column  # noqa: F401

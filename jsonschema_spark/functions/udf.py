@@ -37,21 +37,6 @@ def _get_compiled(schema_json: str, assert_format: bool):
     return _COMPILED_CACHE[key]
 
 
-def valid_flag_udf(schema: Any, *, assert_format: bool = False) -> Column:
-    """Factory: returns a callable Column builder `f(json_col)` → boolean."""
-    schema_json = json.dumps(schema) if not isinstance(schema, str) else schema
-
-    @F.pandas_udf("boolean")
-    def _validate(batch: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        compiled = _get_compiled(schema_json, assert_format)
-        for series in batch:
-            yield series.map(
-                lambda s: compiled.validate_json(s).valid if s is not None else None
-            )
-
-    return _validate
-
-
 def validate_json_column(
     df: DataFrame,
     json_col: str,

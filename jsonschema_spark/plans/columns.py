@@ -20,8 +20,9 @@ JSON documents) is routed to the Arrow-batched evaluator UDF in
 ``jsonschema_spark.functions.udf`` — see SURVEY.md §4.2.
 
 The applicator layer (logical applicators, $ref / $dynamicRef, unevaluated*
-claims, summary rows, staging) is the planner core shared with the raw-JSON
-planner, ``plans.core``; this module holds the typed value model.
+claims, summary rows, staging) and the array and map keywords are the planner
+core shared with the raw-JSON planner, ``plans.core``; this module holds the
+typed value model and the static lowering of StructType objects.
 """
 
 from __future__ import annotations
@@ -44,11 +45,10 @@ from jsonschema_spark.plans.core import (
     dec_scale,
     divisor_fraction,
     double_multiple,
-    element_summary,
     empty_violations,
     escape_token,
     joined_violation,
-    list_summary,
+    num_text,
     safe,
     summary_violation,
 )
@@ -175,7 +175,35 @@ class SparkPlanCompiler(PlanCompiler):
     def _has(self, val: Val, name: str) -> Column | None:
         if isinstance(val.dtype, T.StructType) and name in val.dtype.fieldNames():
             return val.col[name].isNotNull()
+        if isinstance(val.dtype, T.MapType):
+            return F.map_contains_key(self._map(val), name)
         return None
+
+    # collection hooks (plans.core): a depth step is a $ref hop only; an
+    # element's / value's type is the array's / map's static one
+
+    STEP = 0
+
+    def _array(self, val: Val, present: Column) -> tuple[Column, Column] | None:
+        return (val.col, present) if isinstance(val.dtype, T.ArrayType) else None
+
+    def _keyed(self, val: Val, present: Column) -> Column | None:
+        return present if isinstance(val.dtype, T.MapType) else None
+
+    def _map(self, val: Val) -> Column:
+        if isinstance(val.dtype.keyType, T.StringType):
+            return val.col
+        return F.transform_keys(val.col, lambda k, _: k.cast("string"))
+
+    def _get(self, val: Val, name: str) -> Column:
+        return self._map(val)[name]
+
+    def _at(self, val: Val, arr: Column, i: int) -> Column:
+        return F.when(F.size(arr) > i, F.element_at(arr, i + 1))  # out of range: absent
+
+    def _member(self, val: Val, col: Column, path: Column, in_lambda: bool) -> Val:
+        dt = val.dtype.elementType if isinstance(val.dtype, T.ArrayType) else val.dtype.valueType
+        return Val(col=col, dtype=dt, path=path, in_lambda=in_lambda)
 
     def _compile_value(self, schema: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
         def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
@@ -193,13 +221,9 @@ class SparkPlanCompiler(PlanCompiler):
         ):
             self._compile_content(schema, val, add, parts, valids, present)
 
-        # ---- type-directed recursion ------------------------------------
+        # a struct's field set is static; arrays and maps lower in the core
         if isinstance(val.dtype, T.StructType):
             self._compile_object(schema, val, parts, valids, present, depth)
-        if isinstance(val.dtype, T.ArrayType):
-            self._compile_array(schema, val, parts, valids, present, depth)
-        if isinstance(val.dtype, T.MapType):
-            self._compile_map(schema, val, parts, valids, present, depth)
 
     # ---------------------------------------------------------------- content
 
@@ -234,16 +258,12 @@ class SparkPlanCompiler(PlanCompiler):
             )
 
             try:
-                vp = VariantPlanCompiler(s["contentSchema"], assert_format=self.assert_format)
+                sub_v = VariantPlanCompiler(s["contentSchema"], assert_format=self.assert_format).violations_column(
+                    parsed, val.path, stages=self._stages if not val.in_lambda else None,
+                )
             except VariantCompileError as exc:
                 raise PlanCompileError(f"contentSchema needs the UDF path: {exc}") from exc
-            sub_v = self._maybe_stage(
-                vp.violations_column(
-                    parsed, val.path,
-                    stages=self._stages if not val.in_lambda else None,
-                ),
-                val,
-            )
+            sub_v = self._maybe_stage(sub_v, val)
             ok = safe(parsed.isNotNull())
             parts.append(F.when(ok, sub_v).otherwise(empty_violations()))
             mismatch = safe(ok & (F.size(sub_v) > 0))
@@ -256,6 +276,13 @@ class SparkPlanCompiler(PlanCompiler):
 
     def _compile_assertions(self, s: dict, val: Val, add, present: Column) -> None:
         dt = val.dtype
+        # the value as params print it: a float/double's integral value
+        # without ".0", like the scalar core
+        shown = (
+            num_text(val.col, val.col.try_cast("decimal(38,0)"))
+            if isinstance(dt, (T.FloatType, T.DoubleType))
+            else val.col
+        )
 
         if "type" in s:
             declared = s["type"] if isinstance(s["type"], list) else [s["type"]]
@@ -288,7 +315,7 @@ class SparkPlanCompiler(PlanCompiler):
                     "enum",
                     "value_not_in_enum",
                     {
-                        "received": val.col.cast("string"),
+                        "received": shown.cast("string"),
                         "expected": F.lit(", ".join(fmt_num(a) if not isinstance(a, str) else a for a in allowed)),
                     },
                 )
@@ -327,7 +354,7 @@ class SparkPlanCompiler(PlanCompiler):
                         "exclusiveMinimum": "exclusive_minimum",
                         "exclusiveMaximum": "exclusive_maximum",
                     }[kw]
-                    add(cond, kw, code, {"value": val.col, pkey: F.lit(fmt_num(s[kw]))})
+                    add(cond, kw, code, {"value": shown, pkey: F.lit(fmt_num(s[kw]))})
             if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
                 div = s["multipleOf"]
                 fdiv = divisor_fraction(div)
@@ -646,151 +673,6 @@ class SparkPlanCompiler(PlanCompiler):
         parts.append(
             summary_violation(conds, val.path, keyword, code_single, code_plural)
         )
-
-    # ------------------------------------------------------------------ arrays
-
-    def _compile_array(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
-        dt: T.ArrayType = val.dtype  # type: ignore[assignment]
-        elem_dt = dt.elementType
-        n = F.size(val.col)
-
-        def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = safe(present & cond)
-            parts.append(cond_violation(cond, val.path, keyword, code, params))
-            valids.append(~cond)
-
-        if "minItems" in s:
-            k = int(s["minItems"])
-            add(n < k, "minItems", "items_too_short", {"min_items": F.lit(k)})
-        if "maxItems" in s:
-            k = int(s["maxItems"])
-            add(n > k, "maxItems", "items_too_long", {"max_items": F.lit(k)})
-        if s.get("uniqueItems") is True:
-            # hash-based distinct — Spark struct equality matches JSON equality
-            # for fixed-schema elements (reference: unique_items.go hash+verify)
-            add(
-                F.size(F.array_distinct(val.col)) != n,
-                "uniqueItems",
-                "unique_items_mismatch",
-                {"duplicates": F.lit("")},
-            )
-
-        prefix = s.get("prefixItems") if isinstance(s.get("prefixItems"), list) else []
-        pi_conds: list[tuple[Column, Any]] = []
-        for i, branch in enumerate(prefix):
-            elem = F.element_at(val.col, i + 1)  # null when out of range
-            sub_val = Val(
-                col=F.when(n > i, elem),  # treat out-of-range as absent
-                dtype=elem_dt,
-                path=F.concat(val.path, F.lit(f"/{i}")),
-                in_lambda=val.in_lambda,
-            )
-            sub = self._compile(branch, sub_val, depth)
-            parts.append(sub.violations)
-            valids.append(sub.valid)
-            pi_conds.append((safe(present & ~sub.valid), i))
-        parts.append(
-            summary_violation(
-                pi_conds, val.path, "prefixItems",
-                "prefix_item_mismatch", "prefix_items_mismatch",
-                param_single="index", param_plural="indexs", sort_plural=False,
-            )
-        )
-
-        if "items" in s and isinstance(s["items"], (dict, bool)):
-            branch = s["items"]
-            # per-element violations via transform → flatten (no shuffle)
-            def _elem_violations(x: Column, i: Column) -> Column:
-                sub_val = Val(
-                    col=x,
-                    dtype=elem_dt,
-                    path=F.concat(val.path, F.lit("/"), i.cast("string")),
-                    in_lambda=True,
-                )
-                node = self._compile(branch, sub_val, depth)
-                if prefix:
-                    return F.when(i >= len(prefix), node.violations).otherwise(empty_violations())
-                return node.violations
-
-            # ONE evaluation of the per-element schema (staged when possible);
-            # leafs AND the scalar-parity summary row both derive from it
-            pev = self._maybe_stage(F.transform(val.col, _elem_violations), val)
-            element_summary(present, pev, val.path, "items", "item_mismatch", "items_mismatch", parts, valids)
-
-        if "contains" in s:
-            branch = s["contains"]
-
-            def _match(x: Column) -> Column:
-                sub_val = Val(col=x, dtype=elem_dt, path=F.lit(""), in_lambda=True)
-                return self._compile(branch, sub_val, depth).valid
-
-            matches = F.size(F.filter(val.col, _match))
-            min_c = int(s.get("minContains", 1))
-            max_c = s.get("maxContains")
-            if min_c > 0:
-                add(matches < min_c, "contains", "contains_too_few_items", {"min_contains": F.lit(min_c)})
-            if max_c is not None:
-                add(matches > int(max_c), "maxContains", "contains_too_many_items", {"max_contains": F.lit(int(max_c))})
-
-        if "unevaluatedItems" in s:
-            # static resolution (SURVEY §2.3): an element is evaluated when a
-            # claim source covers its index or a claimed contains matches it
-            branch = s["unevaluatedItems"]
-            sources = self._claims(s, val, depth, "Items")
-
-            def _uneval_violations(x: Column, i: Column) -> Column:
-                x_val = Val(col=x, dtype=elem_dt, path=F.concat(val.path, F.lit("/"), i.cast("string")), in_lambda=True)
-                evaluated = self._item_claimed(sources, x_val, i, depth)
-                return F.when(~evaluated, self._compile(branch, x_val, depth).violations).otherwise(empty_violations())
-
-            if branch is not True and branch != {} and not self._evaluates_all(sources):
-                pev = self._maybe_stage(F.transform(val.col, _uneval_violations), val)
-                element_summary(
-                    present, pev, val.path, "unevaluatedItems",
-                    "unevaluated_item_mismatch", "unevaluated_items_mismatch", parts, valids,
-                )
-
-    # -------------------------------------------------------------------- maps
-
-    def _compile_map(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
-        dt: T.MapType = val.dtype  # type: ignore[assignment]
-
-        def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = safe(present & cond)
-            parts.append(cond_violation(cond, val.path, keyword, code, params))
-            valids.append(~cond)
-
-        n = F.size(val.col)
-        if "minProperties" in s:
-            k = int(s["minProperties"])
-            add(n < k, "minProperties", "too_few_properties", {"min_properties": F.lit(k)})
-        if "maxProperties" in s:
-            k = int(s["maxProperties"])
-            add(n > k, "maxProperties", "too_many_properties", {"max_properties": F.lit(k)})
-        if "required" in s and isinstance(s["required"], list):
-            req_conds: list[tuple[Column, Any]] = []
-            for prop in s["required"]:
-                cond = safe(present & ~F.array_contains(F.map_keys(val.col), prop))
-                req_conds.append((cond, prop))
-                valids.append(~cond)
-            parts.append(
-                summary_violation(
-                    req_conds, val.path, "required",
-                    "missing_required_property", "missing_required_properties",
-                    sort_plural=False,
-                )
-            )
-        if "propertyNames" in s and isinstance(s["propertyNames"], dict):
-            pn = s["propertyNames"]
-            if "pattern" in pn:
-                bad = F.filter(F.map_keys(val.col), lambda k: ~safe(k.rlike(pn["pattern"])))
-                parts.append(
-                    list_summary(
-                        present, bad, val.path, "propertyNames",
-                        "property_name_mismatch", "property_names_mismatch",
-                    )
-                )
-                valids.append(~safe(present & (F.size(bad) > 0)))
 
 
 def validate_dataframe(

@@ -8,7 +8,8 @@ SQL NULL => absent), traversal via `try_variant_get`, arrays via
 `cast to array<variant>` + higher-order functions, object keys via
 `cast to map<string,variant>`. Zero Python per row. The applicator layer
 (logical applicators, $ref / $dynamicRef, unevaluated* claims, summary rows)
-is the shared planner core in plans.core.
+and the array and object keywords are the shared planner core in plans.core;
+this module holds the variant value model.
 
 functions.udf falls back to the Arrow-batched scalar-evaluator UDF only for
 the residue: keywords outside `_SUPPORTED` (content vocabulary, legacy
@@ -47,14 +48,9 @@ from jsonschema_spark.plans.core import (
     cond_violation,
     divisor_fraction,
     double_multiple,
-    element_summary,
     empty_violations,
-    escape_token,
-    joined_violation,
-    list_summary,
-    mk_violation,
+    num_text,
     safe,
-    summary_violation,
 )
 
 __all__ = ["VariantPlanCompiler", "VariantCompileError", "validate_variant_column"]
@@ -77,13 +73,6 @@ _SUPPORTED = {
     "unevaluatedItems",
 }
 
-# propertyNames subschemas evaluate against the key STRING; only these
-# keywords are expressible as plain string-column predicates
-_NAME_SCHEMA_KEYWORDS = {
-    "type", "pattern", "minLength", "maxLength", "enum", "const", "format",
-    "title", "description", "$comment",
-}
-
 _BOUNDS = (
     ("minimum", "value_below_minimum", "minimum", lambda x, b: x < b),
     ("maximum", "value_above_maximum", "maximum", lambda x, b: x > b),
@@ -94,11 +83,6 @@ _BOUNDS = (
 
 class VariantCompileError(ValueError):
     pass
-
-
-def _esc_key(k: Column) -> Column:
-    """JSON-pointer token escaping for a runtime key column."""
-    return F.replace(F.replace(k, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1"))
 
 
 def _is_number_t(t: Column) -> Column:
@@ -126,15 +110,6 @@ def _json_type(t: Column, v: Column) -> Column:
         .when(_is_number_t(t), "number")
         .otherwise("unknown")
     )
-
-
-def _num_text(v: Column, num: Column) -> Column:
-    """A numeric variant printed like json_values.fmt_num: integral values
-    without a fraction part ("3", never "3.0"), others in double form."""
-    return F.when(
-        num == F.floor(num),
-        F.coalesce(F.try_variant_get(v, "$", "decimal(38,0)").cast("string"), num.cast("string")),
-    ).otherwise(num.cast("string"))
 
 
 class VariantPlanCompiler(PlanCompiler):
@@ -185,12 +160,6 @@ class VariantPlanCompiler(PlanCompiler):
             elif kw in ("allOf", "anyOf", "oneOf", "prefixItems") and isinstance(sub, list):
                 for s in sub:
                     self._check_supported(s, depth + 1)
-            elif kw == "propertyNames" and isinstance(sub, dict):
-                bad = set(sub) - _NAME_SCHEMA_KEYWORDS
-                if bad:
-                    raise VariantCompileError(
-                        f"propertyNames keywords {sorted(bad)} need the UDF path"
-                    )
             if kw in ("unevaluatedProperties", "unevaluatedItems") and ("$ref" in schema or "$dynamicRef" in schema):
                 # the target compiles twice, for its own rows and as the
                 # claim gate, and under an items lambda the gate re-runs per
@@ -237,14 +206,6 @@ class VariantPlanCompiler(PlanCompiler):
         v = self._maybe_stage(val.col, val)
         return Val(v, val.path, self._maybe_stage(F.schema_of_variant(v), val), val.in_lambda)
 
-    def _false_node(self, val: Val) -> Node:
-        # an ABSENT value (SQL NULL — e.g. zip-padding beyond array end)
-        # satisfies even the false schema; JSON null (VOID) does not
-        return Node(
-            val.col.isNull(),
-            cond_violation(val.col.isNotNull(), val.path, "schema", "false_schema_mismatch"),
-        )
-
     def _node(self, present: Column, parts: list, valids: list) -> Node:
         # SQL NULL == absent (valid, no rows); VOID == JSON null
         node = super()._node(present, parts, valids)
@@ -254,11 +215,37 @@ class VariantPlanCompiler(PlanCompiler):
         )
 
     def _has(self, val: Val, name: str) -> Column:
-        return val.dtype.startswith("OBJECT") & self._child(val, name).isNotNull()
+        # a key path is NULL on every non-object, so no type test is needed
+        return self._get(val, name).isNotNull()
 
-    @staticmethod
-    def _child(val: Val, name: str) -> Column:
+    # collection hooks (plans.core): arrays via cast to array<variant>,
+    # object keys via cast to map<string,variant>, members via variant paths
+
+    STEP = 1
+
+    def _array(self, val: Val, present: Column) -> tuple[Column, Column]:
+        return F.try_variant_get(val.col, "$", "array<variant>"), present & val.dtype.startswith("ARRAY")
+
+    def _keyed(self, val: Val, present: Column) -> Column:
+        return present & val.dtype.startswith("OBJECT")
+
+    def _map(self, val: Val) -> Column:
+        # staged: the variant→map conversion happens once per row instead
+        # of once per key reference
+        return self._maybe_stage(val.col.try_cast("map<string,variant>"), val)
+
+    def _get(self, val: Val, name: str) -> Column:
         return F.try_variant_get(val.col, f"$['{name}']", "variant")
+
+    def _at(self, val: Val, arr: Column, i: int) -> Column:
+        return F.try_variant_get(val.col, f"$[{i}]", "variant")
+
+    def _member(self, val: Val, col: Column, path: Column, in_lambda: bool) -> Val:
+        return Val(col, path, in_lambda=in_lambda)
+
+    def _unique_key(self, arr: Column) -> Column:
+        # canonical JSON text: variant normalizes number forms (2.0 -> 2)
+        return F.transform(arr, lambda x: F.to_json(x))
 
     def _compile_value(self, s: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
         def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
@@ -267,8 +254,6 @@ class VariantPlanCompiler(PlanCompiler):
             valids.append(~cond)
 
         self._assertions(s, val.col, val.dtype, add)
-        self._object_kw(s, val, parts, valids, present, depth)
-        self._array_kw(s, val, parts, valids, present, depth)
 
     # ------------------------------------------------------------- assertions
 
@@ -292,7 +277,7 @@ class VariantPlanCompiler(PlanCompiler):
             # received / expected as the scalar core prints them
             received = (
                 F.when(jt == "string", text)
-                .when(jt.isin("integer", "number"), _num_text(v, num))
+                .when(jt.isin("integer", "number"), num_text(num, F.try_variant_get(v, "$", "decimal(38,0)")))
                 .when(jt == "boolean", F.try_variant_get(v, "$", "string"))
                 .otherwise(jt)
             )
@@ -300,12 +285,13 @@ class VariantPlanCompiler(PlanCompiler):
             add(~ok, "enum", "value_not_in_enum", {"received": received, "expected": F.lit(expected)})
 
         if "const" in s:
-            add(~self._eq_const(v, t, num, text, s["const"]), "const", "const_mismatch")
+            code = "const_mismatch_null" if s["const"] is None else "const_mismatch"
+            add(~self._eq_const(v, t, num, text, s["const"]), "const", code)
 
         for kw, code, pkey, mk in _BOUNDS:
             if kw in s and isinstance(s[kw], (int, float, Fraction)) and not isinstance(s[kw], bool):
                 add(_is_number_t(t) & mk(num, F.lit(float(s[kw]))), kw, code,
-                    {"value": _num_text(v, num), pkey: F.lit(fmt_num(s[kw]))})
+                    {"value": num_text(num, F.try_variant_get(v, "$", "decimal(38,0)")), pkey: F.lit(fmt_num(s[kw]))})
 
         if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
             div = s["multipleOf"]
@@ -348,338 +334,6 @@ class VariantPlanCompiler(PlanCompiler):
         import json as _json
 
         return F.to_json(v) == F.lit(_json.dumps(item, separators=(",", ":"), sort_keys=True))
-
-    # ---------------------------------------------------------------- objects
-
-    def _object_kw(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
-        v, path = val.col, val.path
-        is_obj = val.dtype.startswith("OBJECT")
-
-        if "required" in s and isinstance(s["required"], list):
-            req_conds = []
-            for name in s["required"]:
-                cond = present & safe(is_obj & self._child(val, name).isNull())
-                req_conds.append((cond, name))
-                valids.append(~cond)
-            parts.append(
-                summary_violation(
-                    req_conds, path, "required",
-                    "missing_required_property", "missing_required_properties",
-                    sort_plural=False,
-                )
-            )
-
-        if "dependentRequired" in s and isinstance(s["dependentRequired"], dict):
-            dr_conds = []
-            for trigger, needs in s["dependentRequired"].items():
-                trig = self._child(val, trigger).isNotNull()
-                for name in needs:
-                    cond = present & safe(is_obj & trig & self._child(val, name).isNull())
-                    dr_conds.append((cond, name))
-                    valids.append(~cond)
-            if dr_conds:
-                parts.append(
-                    joined_violation(
-                        dr_conds, path, "dependentRequired",
-                        "dependent_property_required", "missing_properties",
-                    )
-                )
-
-        if "properties" in s and isinstance(s["properties"], dict):
-            prop_conds = []
-            for name, sub in s["properties"].items():
-                child = Val(self._child(val, name), F.concat(path, F.lit("/" + escape_token(name))),
-                            in_lambda=val.in_lambda)
-                node = self._compile(sub, child, depth + 1)
-                if self._stages is not None and not val.in_lambda:
-                    # evaluate each property's checks ONCE: the staged
-                    # violations feed leafs, validity AND the summary flag
-                    viols = self._maybe_stage(node.violations, val)
-                    gated_invalid = present & is_obj & safe(F.size(viols) > 0)
-                else:
-                    viols = node.violations
-                    gated_invalid = present & is_obj & safe(~node.valid)
-                parts.append(F.when(present & is_obj, viols).otherwise(empty_violations()))
-                prop_conds.append((gated_invalid, name))
-                valids.append(~gated_invalid)
-            parts.append(
-                summary_violation(
-                    prop_conds, path, "properties",
-                    "property_mismatch", "properties_mismatch",
-                )
-            )
-
-        # ---- dynamic-key residue: enumerate keys via map<string,variant> ----
-        needs_keys = any(
-            k in s
-            for k in (
-                "patternProperties", "additionalProperties", "propertyNames",
-                "minProperties", "maxProperties", "unevaluatedProperties",
-            )
-        )
-        if not needs_keys:
-            return
-        # stage the cast + key list: every per-key access references the
-        # STAGED map column, so the variant→map conversion happens once
-        # per row instead of once per key reference
-        m = self._maybe_stage(v.try_cast("map<string,variant>"), val)
-        keys = self._maybe_stage(F.map_keys(m), val)
-        obj = present & is_obj & m.isNotNull()
-
-        def key_summary(bad: Column, keyword: str, code_single: str, code_plural: str) -> None:
-            parts.append(list_summary(obj, bad, path, keyword, code_single, code_plural))
-            valids.append(~safe(obj & (F.size(bad) > 0)))
-
-        if "minProperties" in s:
-            k = int(s["minProperties"])
-            cond = obj & safe(F.size(keys) < k)
-            parts.append(cond_violation(cond, path, "minProperties", "too_few_properties",
-                                        {"min_properties": F.lit(k)}))
-            valids.append(~cond)
-        if "maxProperties" in s:
-            k = int(s["maxProperties"])
-            cond = obj & safe(F.size(keys) > k)
-            parts.append(cond_violation(cond, path, "maxProperties", "too_many_properties",
-                                        {"max_properties": F.lit(k)}))
-            valids.append(~cond)
-
-        if "propertyNames" in s and isinstance(s["propertyNames"], (dict, bool)):
-            bad = F.filter(keys, lambda k: ~safe(self._name_valid(s["propertyNames"], k)))
-            key_summary(bad, "propertyNames", "property_name_mismatch", "property_names_mismatch")
-
-        # Cost note (r3, measured at sf0.1 / 100k rows / 3 keys): the
-        # per-key transforms below dominate dynamic-object validation
-        # (~1.5s each standalone vs 3.2s full). Precomputing a per-object
-        # key→type map (map_from_entries of schema_of_variant per entry)
-        # is a measured DEAD END: 4 lookups/key cost 0.69s vs 0.57s for
-        # re-running schema_of_variant 4x — repeated typing is only
-        # ~0.15s of the total. The remaining cost is per-key violation
-        # construction inside interpreted HOF lambdas, intrinsic until
-        # Spark codegens higher-order functions.
-        pats = (
-            list(s["patternProperties"].items())
-            if isinstance(s.get("patternProperties"), dict)
-            else []
-        )
-        if pats:
-            pp_bad: Column | None = None
-            for pat, branch in pats:
-                matching = self._maybe_stage(F.filter(keys, lambda k: safe(k.rlike(pat))), val)
-                # ONE evaluation per key: the staged per-key violations
-                # array feeds the leafs AND the bad-key derivation
-                pv = self._maybe_stage(
-                    F.transform(matching, self._kv_violations(branch, m, path, depth)), val
-                )
-                parts.append(F.when(obj, F.flatten(pv)).otherwise(empty_violations()))
-                bad_k = F.filter(
-                    F.zip_with(matching, pv, lambda k, a: F.when(F.size(a) > 0, k)),
-                    lambda x: x.isNotNull(),
-                )
-                pp_bad = bad_k if pp_bad is None else F.concat(pp_bad, bad_k)
-            key_summary(
-                F.array_distinct(pp_bad), "patternProperties",
-                "pattern_property_mismatch", "pattern_properties_mismatch",
-            )
-
-        def extra_keys(branch: Any, extra: Column, keyword: str, code_single: str, code_plural: str) -> None:
-            """Apply a subschema (or False) to dynamically-enumerated extra
-            keys: per-key leaf violations at the child path + ONE
-            singular/plural summary (scalar-core emission shape)."""
-            if branch is True or branch == {}:
-                return
-            extra = self._maybe_stage(extra, val)
-            if branch is False:
-                leafs = F.transform(
-                    extra,
-                    lambda k: mk_violation(
-                        F.concat(path, F.lit("/"), _esc_key(k)), "schema", "false_schema_mismatch"
-                    ),
-                )
-                parts.append(F.when(obj, leafs).otherwise(empty_violations()))
-                bad = extra
-            else:
-                pv = self._maybe_stage(
-                    F.transform(extra, self._kv_violations(branch, m, path, depth)), val
-                )
-                parts.append(F.when(obj, F.flatten(pv)).otherwise(empty_violations()))
-                bad = F.filter(
-                    F.zip_with(extra, pv, lambda k, a: F.when(F.size(a) > 0, k)),
-                    lambda x: x.isNotNull(),
-                )
-            key_summary(bad, keyword, code_single, code_plural)
-
-        if "additionalProperties" in s and isinstance(s["additionalProperties"], (dict, bool)):
-            declared = list(s.get("properties", {}) or {})
-            extra = F.filter(
-                keys,
-                lambda k: ~k.isin(*declared) if declared else F.lit(True),
-            )
-            for pat, _b in pats:
-                extra = F.filter(extra, lambda k: ~safe(k.rlike(pat)))
-            extra_keys(
-                s["additionalProperties"], extra, "additionalProperties",
-                "additional_property_mismatch", "additional_properties_mismatch",
-            )
-
-        if "unevaluatedProperties" in s and isinstance(s["unevaluatedProperties"], (dict, bool)):
-            sources = self._claims(s, val, depth, "Properties")
-            if not self._evaluates_all(sources):
-
-                def unclaimed(k: Column) -> Column:
-                    claimed = F.lit(False)
-                    for gate, c in sources:
-                        cp = F.lit(c.every)
-                        if c.names:
-                            cp = cp | k.isin(*sorted(set(c.names)))
-                        for pat in c.patterns:
-                            cp = cp | safe(k.rlike(pat))
-                        claimed = claimed | (cp if gate is None else (gate & cp))
-                    return ~safe(claimed)
-
-                extra_keys(
-                    s["unevaluatedProperties"], F.filter(keys, unclaimed), "unevaluatedProperties",
-                    "unevaluated_property_mismatch", "unevaluated_properties_mismatch",
-                )
-
-    def _kv_violations(self, branch, m: Column, path: Column, depth: int):
-        """Per-key violations lambda (nested compiles are non-stageable)."""
-
-        def fn(k: Column) -> Column:
-            child = Val(F.element_at(m, k), F.concat(path, F.lit("/"), _esc_key(k)), in_lambda=True)
-            return self._compile(branch, child, depth + 1).violations
-
-        return fn
-
-    def _name_valid(self, sub: Any, k: Column) -> Column:
-        """propertyNames subschema as a predicate over the key string."""
-        if sub is True or sub == {}:
-            return F.lit(True)
-        if sub is False:
-            return F.lit(False)
-        ok = F.lit(True)
-        t = sub.get("type")
-        if t is not None and t != "string" and t != ["string"]:
-            # keys are always strings; any other required type never matches
-            ok = ok & F.lit("string" in t if isinstance(t, list) else False)
-        if isinstance(sub.get("pattern"), str):
-            ok = ok & safe(k.rlike(sub["pattern"]))
-        if "minLength" in sub:
-            ok = ok & (F.length(k) >= int(sub["minLength"]))
-        if "maxLength" in sub:
-            ok = ok & (F.length(k) <= int(sub["maxLength"]))
-        if isinstance(sub.get("enum"), list):
-            opts = [x for x in sub["enum"] if isinstance(x, str)]
-            ok = ok & (k.isin(*opts) if opts else F.lit(False))
-        if "const" in sub:
-            ok = ok & (k == F.lit(sub["const"]) if isinstance(sub["const"], str) else F.lit(False))
-        if isinstance(sub.get("format"), str) and self.assert_format:
-            rx = SPARK_REGEX_FORMATS.get(sub["format"])
-            if rx is not None:
-                ok = ok & safe(k.rlike(rx))
-        return ok
-
-    # ----------------------------------------------------------------- arrays
-
-    def _array_kw(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
-        path = val.path
-        is_arr = val.dtype.startswith("ARRAY")
-        arr = F.try_variant_get(val.col, "$", "array<variant>")
-        n = F.size(arr)
-        gate = safe(present & is_arr)
-
-        def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = present & is_arr & safe(cond)
-            parts.append(cond_violation(cond, path, keyword, code, params))
-            valids.append(~cond)
-
-        if "minItems" in s:
-            add(n < int(s["minItems"]), "minItems", "items_too_short",
-                {"min_items": F.lit(int(s["minItems"]))})
-        if "maxItems" in s:
-            add(n > int(s["maxItems"]), "maxItems", "items_too_long",
-                {"max_items": F.lit(int(s["maxItems"]))})
-        if s.get("uniqueItems") is True:
-            canon = F.transform(arr, lambda x: F.to_json(x))
-            # index groups of equal elements, first-occurrence order, as the
-            # scalar core prints them: "(0, 2); (1, 3)"
-            groups = F.filter(
-                F.transform(
-                    F.array_distinct(canon),
-                    lambda u: F.filter(F.sequence(F.lit(0), n - 1), lambda i: F.element_at(canon, i + 1) == u),
-                ),
-                lambda g: F.size(g) > 1,
-            )
-            dups = F.array_join(
-                F.transform(groups, lambda g: F.concat(F.lit("("), F.array_join(g.cast("array<string>"), ", "), F.lit(")"))),
-                "; ",
-            )
-            add(F.size(F.array_distinct(canon)) != n, "uniqueItems", "unique_items_mismatch",
-                {"duplicates": dups})
-
-        prefix = s.get("prefixItems") if isinstance(s.get("prefixItems"), list) else []
-        pi_conds = []
-        for i, sub in enumerate(prefix):
-            child = Val(F.try_variant_get(val.col, f"$[{i}]", "variant"), F.concat(path, F.lit(f"/{i}")),
-                        in_lambda=val.in_lambda)
-            node = self._compile(sub, child, depth + 1)
-            applies = present & is_arr & (n > i)
-            gated_invalid = applies & safe(~node.valid)
-            parts.append(F.when(applies, node.violations).otherwise(empty_violations()))
-            valids.append(~gated_invalid)
-            pi_conds.append((gated_invalid, i))
-        parts.append(
-            summary_violation(
-                pi_conds, path, "prefixItems",
-                "prefix_item_mismatch", "prefix_items_mismatch",
-                param_single="index", param_plural="indexs", sort_plural=False,
-            )
-        )
-
-        def elem(x: Column, i: Column) -> Val:
-            return Val(x, F.concat(path, F.lit("/"), i.cast("string")), in_lambda=True)
-
-        if "items" in s and isinstance(s["items"], (dict, bool)):
-            # per-element recursion via transform + flatten; ONE evaluation
-            # per element (staged): leafs + the item(s)_mismatch summary
-            def elem_violations(x: Column, i: Column) -> Column:
-                viols = self._compile(s["items"], elem(x, i), depth + 1).violations
-                return F.when(i >= len(prefix), viols).otherwise(empty_violations()) if prefix else viols
-
-            pev = self._maybe_stage(F.transform(arr, elem_violations), val)
-            element_summary(gate, pev, path, "items", "item_mismatch", "items_mismatch", parts, valids)
-
-        if "contains" in s and isinstance(s["contains"], (dict, bool)):
-            def elem_valid(x: Column) -> Column:
-                return self._compile(s["contains"], Val(x, F.lit(""), in_lambda=True), depth + 1).valid
-
-            n_match = F.size(F.filter(arr, elem_valid))
-            min_c = int(s.get("minContains", 1))
-            max_c = s.get("maxContains")
-            if min_c > 0:
-                add(n_match < min_c, "contains", "contains_too_few_items",
-                    {"min_contains": F.lit(min_c)})
-            if max_c is not None:
-                add(n_match > int(max_c), "maxContains", "contains_too_many_items",
-                    {"max_contains": F.lit(int(max_c))})
-
-        if "unevaluatedItems" in s and isinstance(s["unevaluatedItems"], (dict, bool)):
-            branch = s["unevaluatedItems"]
-            sources = self._claims(s, val, depth, "Items")
-            if branch is not True and branch != {} and not self._evaluates_all(sources):
-
-                def uneval_viol(x: Column, i: Column) -> Column:
-                    x_val = elem(x, i)
-                    evaluated = self._item_claimed(sources, x_val, i, depth)
-                    return F.when(x.isNotNull() & ~safe(evaluated),
-                                  self._compile(branch, x_val, depth + 1).violations
-                                  ).otherwise(empty_violations())
-
-                pev = self._maybe_stage(F.transform(arr, uneval_viol), val)
-                element_summary(
-                    gate, pev, path, "unevaluatedItems",
-                    "unevaluated_item_mismatch", "unevaluated_items_mismatch", parts, valids,
-                )
-
 
 _PLAN_CACHE: dict = {}
 _PLAN_CACHE_MAX = 32

@@ -468,8 +468,8 @@ WITH t AS (
   FROM documents),
 c AS (
   SELECT doc_id, tokens, shard,
-         sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                           ROWS UNBOUNDED PRECEDING) - tokens AS start
+         CAST(sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                                ROWS UNBOUNDED PRECEDING) AS BIGINT) - tokens AS start
   FROM t)
 SELECT doc_id, tokens, shard,
        start // 512 AS pack_id,

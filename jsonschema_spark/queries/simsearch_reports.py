@@ -920,8 +920,8 @@ s AS (
   FROM t),
 c AS (
   SELECT doc_id, tokens, shard,
-         sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                           ROWS UNBOUNDED PRECEDING) - tokens AS start
+         CAST(sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                                ROWS UNBOUNDED PRECEDING) AS BIGINT) - tokens AS start
   FROM s)
 SELECT doc_id, tokens, shard,
        start // 2048 AS pack_id,
@@ -1475,9 +1475,9 @@ marked AS (
 ),
 sess AS (
   SELECT user_id, us, value,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_seq
+         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS BIGINT) AS session_seq
   FROM marked
 )
 SELECT user_id, session_seq, count(*) AS n_events,
@@ -2670,7 +2670,7 @@ WITH t AS (
   FROM documents),
 pairs AS (SELECT id, term, count(*) AS c FROM t GROUP BY 1, 2),
 per AS (
-  SELECT id, sum(c) AS n_tokens, count(*) AS n_types,
+  SELECT id, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
          sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS clogc
   FROM pairs GROUP BY id)
 SELECT id, n_tokens, n_types,

@@ -3,6 +3,8 @@
 additionalProperties / dependentSchemas / unevaluatedProperties reduce to
 plan-time field analysis). Every verdict must match the scalar core."""
 
+import json
+
 import pytest
 
 from jsonschema_spark.compiler import Compiler
@@ -66,6 +68,28 @@ CASES = [
 ]
 
 
+# map / array / double columns: the map keywords lower through the shared
+# keyed-object core, uniqueItems prints its duplicate groups, and a double's
+# integral value prints without ".0"
+COLLECTION_CASES = [
+    {"properties": {"m": {"properties": {"a": {"maximum": 3}}}}},
+    {"properties": {"m": {"properties": {"a": {}}, "additionalProperties": False}}},
+    {"properties": {"m": {"additionalProperties": {"minimum": 0}}}},
+    {"properties": {"m": {"patternProperties": {"^x_": {"maximum": 10}}}}},
+    {"properties": {"m": {"propertyNames": {"maxLength": 3}}}},
+    {"properties": {"m": {"dependentRequired": {"a": ["b"]}}}},
+    {"properties": {"m": {"properties": {"a": {}}, "unevaluatedProperties": False}}},
+    {"properties": {"m": {"dependentSchemas": {"a": {"required": ["b"]}}}}},
+    {"properties": {"tags": {"uniqueItems": True}}},
+    {"properties": {"score": {"maximum": 2}}},
+    {"properties": {"score": {"enum": [1, 2]}}},
+]
+
+
+def _case_id(schema) -> str:
+    return json.dumps(schema, separators=(",", ":"))
+
+
 @pytest.fixture(scope="module")
 def obj_df(spark):
     return spark.createDataFrame(
@@ -79,52 +103,98 @@ def obj_df(spark):
     )
 
 
-@pytest.mark.parametrize("schema", CASES, ids=lambda s: "+".join(sorted(s)))
-def test_static_applicator_matches_scalar(spark, obj_df, schema):
-    got = [r["valid"] for r in validate_dataframe(obj_df, schema).collect()]
+@pytest.fixture(scope="module")
+def coll_df(spark):
+    return spark.createDataFrame(
+        [
+            ("r1", {"a": 5, "b": 1}, 3.0, [1, 2, 1]),
+            ("r2", {"a": 1, "x_long": 20, "zz": -1}, 1.5, [3, 3, 4, 4]),
+            ("r3", None, None, None),
+            ("r4", {}, 2.0, []),
+            ("r5", {"b": 2, "longkey": 7}, -4.0, [7]),
+        ],
+        "id string, m map<string,int>, score double, tags array<int>",
+    )
+
+
+def _instance(row) -> dict:
+    return {k: v for k, v in row.asDict().items() if v is not None}
+
+
+def _assert_verdicts_match(df, schema) -> None:
+    got = [r["valid"] for r in validate_dataframe(df, schema).collect()]
     ev = Compiler().compile(schema)
-    for row, got_valid in zip(obj_df.collect(), got):
-        inst = {k: v for k, v in row.asDict().items() if v is not None}
+    for row, got_valid in zip(df.collect(), got):
+        inst = _instance(row)
         assert ev.validate(inst).valid == got_valid, (schema, inst)
 
 
-@pytest.mark.parametrize("schema", CASES, ids=lambda s: "+".join(sorted(s)))
-def test_static_applicator_violation_rows_match_scalar(spark, obj_df, schema):
-    """Violation ROWS, not just flags: (path, keyword, code) multisets must
-    agree typed-planner vs scalar core (guards e.g. double-emission of
-    dependentSchemas sub-violations — reference dependent_schemas.go:17-75),
-    and so must the rendered (path, code, message) rows
-    (reporting.localized_output vs errors.render_message)."""
+def _assert_rows_match(df, key: str, schema) -> None:
+    """Violation ROWS, not just flags: (path, keyword, code) multisets and
+    the rendered (path, code, message) rows (reporting.localized_output vs
+    errors.render_message) must agree with the scalar core per ``key``."""
     import pyspark.sql.functions as SF
 
     from jsonschema_spark.errors import render_message
     from jsonschema_spark.reporting import localized_output
 
-    out = validate_dataframe(obj_df, schema)
+    out = validate_dataframe(df, schema)
     got_rows = (
-        out.select(SF.col("x_code"), SF.explode_outer("violations").alias("v"))
-        .select("x_code", "v.instance_path", "v.keyword", "v.code")
+        out.select(SF.col(key), SF.explode_outer("violations").alias("v"))
+        .select(key, "v.instance_path", "v.keyword", "v.code")
         .collect()
     )
     by_doc: dict = {}
     for r in got_rows:
         if r["instance_path"] is not None:
-            by_doc.setdefault(r["x_code"], []).append(
+            by_doc.setdefault(r[key], []).append(
                 (r["instance_path"], r["keyword"], r["code"])
             )
     messages: dict = {}
-    for r in localized_output(out, ["x_code"]).collect():
-        messages.setdefault(r["x_code"], []).append((r["instance_path"], r["code"], r["message"]))
+    for r in localized_output(out, [key]).collect():
+        messages.setdefault(r[key], []).append((r["instance_path"], r["code"], r["message"]))
     ev = Compiler().compile(schema)
-    for row in obj_df.collect():
-        inst = {k: v for k, v in row.asDict().items() if v is not None}
+    for row in df.collect():
+        inst = _instance(row)
         violations = ev.validate(inst).violations
         want = sorted((v.instance_path, v.keyword, v.code) for v in violations)
-        got = sorted(by_doc.get(row["x_code"], []))
+        got = sorted(by_doc.get(row[key], []))
         assert got == want, (schema, inst, got, want)
         want = sorted((v.instance_path, v.code, render_message(v.code, v.params)) for v in violations)
-        got = sorted(messages.get(row["x_code"], []))
+        got = sorted(messages.get(row[key], []))
         assert got == want, (schema, inst, got, want)
+
+
+@pytest.mark.parametrize("schema", CASES, ids=lambda s: "+".join(sorted(s)))
+def test_static_applicator_matches_scalar(spark, obj_df, schema):
+    _assert_verdicts_match(obj_df, schema)
+
+
+@pytest.mark.parametrize("schema", CASES, ids=lambda s: "+".join(sorted(s)))
+def test_static_applicator_violation_rows_match_scalar(spark, obj_df, schema):
+    """Guards e.g. double-emission of dependentSchemas sub-violations
+    (reference dependent_schemas.go:17-75)."""
+    _assert_rows_match(obj_df, "x_code", schema)
+
+
+@pytest.mark.parametrize("schema", COLLECTION_CASES, ids=_case_id)
+def test_collection_keywords_match_scalar(spark, coll_df, schema):
+    _assert_verdicts_match(coll_df, schema)
+
+
+@pytest.mark.parametrize("schema", COLLECTION_CASES, ids=_case_id)
+def test_collection_violation_rows_match_scalar(spark, coll_df, schema):
+    _assert_rows_match(coll_df, "id", schema)
+
+
+def test_map_property_names_beyond_key_predicates_refused():
+    """A propertyNames keyword no key predicate expresses must refuse, never
+    pass silently."""
+    from pyspark.sql import types as T
+
+    plan = SparkPlanCompiler({"properties": {"m": {"propertyNames": {"not": {"const": "a"}}}}})
+    with pytest.raises(PlanCompileError):
+        plan.violations_column(T.StructType([T.StructField("m", T.MapType(T.StringType(), T.IntegerType()))]))
 
 
 def test_unevaluated_items_static(spark):
