@@ -356,40 +356,44 @@ def _bpe_oracle_sql(rounds: int = 4) -> str:
     non-overlapping merge is the gaps-and-islands form (a candidate
     position fires iff its rank inside its maximal consecutive-candidate
     run is odd) — provably the same rewrite as the Spark stack fold."""
+    # Every CTE is MATERIALIZED: each round reads its predecessors more than
+    # once (s by p and e, c by f and m, f twice, b twice), and DuckDB inlines
+    # each reference of a plain CTE, so the plan would grow geometrically
+    # with the round count. The apply chain below does the same.
     ctes = [
-        """w0 AS (SELECT w, count(*) AS n FROM (
+        """w0 AS MATERIALIZED (SELECT w, count(*) AS n FROM (
     SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS w
     FROM documents) WHERE w <> '' GROUP BY 1)""",
-        """v0 AS (SELECT regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS sym, CAST(n AS BIGINT) AS n FROM w0)""",
+        """v0 AS MATERIALIZED (SELECT regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS sym, CAST(n AS BIGINT) AS n FROM w0)""",
     ]
     for r in range(rounds):
         ctes.append(
-            f"""s{r} AS (SELECT sym, n, string_split(sym, ' ') AS s FROM v{r})"""
+            f"""s{r} AS MATERIALIZED (SELECT sym, n, string_split(sym, ' ') AS s FROM v{r})"""
         )
         ctes.append(
-            f"""p{r} AS (SELECT s[t.j] AS l, s[t.j + 1] AS r, CAST(sum(n) AS BIGINT) AS cnt
+            f"""p{r} AS MATERIALIZED (SELECT s[t.j] AS l, s[t.j + 1] AS r, CAST(sum(n) AS BIGINT) AS cnt
     FROM s{r}, unnest(range(1, len(s))) AS t(j) GROUP BY 1, 2)"""
         )
         ctes.append(
-            f"""b{r} AS (SELECT l, r, cnt FROM p{r} ORDER BY cnt DESC, l, r LIMIT 1)"""
+            f"""b{r} AS MATERIALIZED (SELECT l, r, cnt FROM p{r} ORDER BY cnt DESC, l, r LIMIT 1)"""
         )
         if r < rounds - 1:
             ctes.append(
-                f"""e{r} AS (SELECT sym, n, t.j, s[t.j] AS x, len(s) AS m, s
+                f"""e{r} AS MATERIALIZED (SELECT sym, n, t.j, s[t.j] AS x, len(s) AS m, s
     FROM s{r}, unnest(range(1, len(s) + 1)) AS t(j))"""
             )
             ctes.append(
-                f"""c{r} AS (SELECT e.*, (e.x = b.l AND e.j < e.m AND e.s[e.j + 1] = b.r) AS cand
+                f"""c{r} AS MATERIALIZED (SELECT e.*, (e.x = b.l AND e.j < e.m AND e.s[e.j + 1] = b.r) AS cand
     FROM e{r} e CROSS JOIN b{r} b)"""
             )
             ctes.append(
-                f"""f{r} AS (SELECT sym, j FROM (
+                f"""f{r} AS MATERIALIZED (SELECT sym, j FROM (
       SELECT sym, j, j - row_number() OVER (PARTITION BY sym ORDER BY j) AS grp
       FROM c{r} WHERE cand)
     QUALIFY row_number() OVER (PARTITION BY sym, grp ORDER BY j) % 2 = 1)"""
             )
             ctes.append(
-                f"""m{r} AS (SELECT e.sym AS osym, any_value(e.n) AS n,
+                f"""m{r} AS MATERIALIZED (SELECT e.sym AS osym, any_value(e.n) AS n,
       string_agg(CASE WHEN f.j IS NOT NULL THEN (SELECT l || r FROM b{r}) ELSE e.x END,
                  ' ' ORDER BY e.j) AS sym
     FROM c{r} e
@@ -399,7 +403,7 @@ def _bpe_oracle_sql(rounds: int = 4) -> str:
     GROUP BY e.sym)"""
             )
             ctes.append(
-                f"""v{r + 1} AS (SELECT sym, CAST(sum(n) AS BIGINT) AS n FROM m{r} GROUP BY 1)"""
+                f"""v{r + 1} AS MATERIALIZED (SELECT sym, CAST(sum(n) AS BIGINT) AS n FROM m{r} GROUP BY 1)"""
             )
     finals = [
         f"SELECT CAST({r} AS INT) AS round, l AS left_sym, r AS right_sym,"
@@ -963,16 +967,16 @@ def _bpe_apply_round(src: str, key: str, brule: str, out: str, tag: str) -> list
     """CTE block applying one merge rule to (key, sym) rows — the
     gaps-and-islands greedy form keyed on `key`."""
     return [
-        f"""{tag}s AS (SELECT {key}, sym, string_split(sym, ' ') AS s FROM {src})""",
-        f"""{tag}e AS (SELECT {key}, t.j, s[t.j] AS x, len(s) AS m, s
+        f"""{tag}s AS MATERIALIZED (SELECT {key}, sym, string_split(sym, ' ') AS s FROM {src})""",
+        f"""{tag}e AS MATERIALIZED (SELECT {key}, t.j, s[t.j] AS x, len(s) AS m, s
     FROM {tag}s, unnest(range(1, len(s) + 1)) AS t(j))""",
-        f"""{tag}c AS (SELECT e.*, (e.x = b.l AND e.j < e.m AND e.s[e.j + 1] = b.r) AS cand
+        f"""{tag}c AS MATERIALIZED (SELECT e.*, (e.x = b.l AND e.j < e.m AND e.s[e.j + 1] = b.r) AS cand
     FROM {tag}e e CROSS JOIN {brule} b)""",
-        f"""{tag}f AS (SELECT {key}, j FROM (
+        f"""{tag}f AS MATERIALIZED (SELECT {key}, j FROM (
       SELECT {key}, j, j - row_number() OVER (PARTITION BY {key} ORDER BY j) AS grp
       FROM {tag}c WHERE cand)
     QUALIFY row_number() OVER (PARTITION BY {key}, grp ORDER BY j) % 2 = 1)""",
-        f"""{out} AS (SELECT e.{key},
+        f"""{out} AS MATERIALIZED (SELECT e.{key},
       string_agg(CASE WHEN f.j IS NOT NULL THEN (SELECT l || r FROM {brule}) ELSE e.x END,
                  ' ' ORDER BY e.j) AS sym
     FROM {tag}c e
@@ -992,19 +996,19 @@ def _bpe_apply_oracle_sql(rounds: int = 4) -> str:
     # the training chain only materializes merges up to v{rounds-1}; the
     # apply chain rewrites the distinct-WORD relation through ALL rules
     ctes.append(
-        """wd AS (SELECT doc_id AS id, w, count(*) AS n FROM (
+        """wd AS MATERIALIZED (SELECT doc_id AS id, w, count(*) AS n FROM (
     SELECT doc_id,
            unnest(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS w
     FROM documents) WHERE w <> '' GROUP BY 1, 2)"""
     )
     ctes.append(
-        """a0 AS (SELECT w, regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS sym
+        """a0 AS MATERIALIZED (SELECT w, regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS sym
     FROM (SELECT DISTINCT w FROM wd))"""
     )
     for r in range(rounds):
         ctes.extend(_bpe_apply_round(f"a{r}", "w", f"b{r}", f"a{r + 1}", f"ap{r}"))
     ctes.append(
-        f"""lens AS (SELECT w, len(w) + 1 AS pre,
+        f"""lens AS MATERIALIZED (SELECT w, len(w) + 1 AS pre,
     len(string_split(sym, ' ')) AS post FROM a{rounds})"""
     )
     final = """SELECT wd.id AS id, CAST(sum(wd.n) AS BIGINT) AS n_words,

@@ -1,12 +1,15 @@
 """Built-in HTTP(S) remote-ref loader (reference: compiler.go:336-339,397-427
-— a 10s-timeout http client behind a per-scheme registry). The suite's
-refRemote cases run against a REAL local HTTP server serving the suite's
-remotes/ directory, exactly like the upstream harness serves :1234."""
+— a 10s-timeout http client behind a per-scheme registry). Every test here
+fetches over a REAL local HTTP server. The built-in fetch test serves its own
+fixture document from a temporary directory; only the suite's refRemote case
+needs the vendored JSON-Schema-Test-Suite, whose remotes/ directory it serves
+exactly like the upstream harness serves :1234, and it skips without it."""
 
 from __future__ import annotations
 
 import functools
 import http.server
+import json
 import threading
 
 import pytest
@@ -16,16 +19,29 @@ from jsonschema_spark.loaders import HTTPLoader, SchemaLoadError, SchemeLoader
 from tests.suite_loader import REMOTES_DIR, load_cases, suite_available
 
 
-@pytest.fixture(scope="module")
-def remotes_server():
+def _serve(directory: str):
     handler = functools.partial(
-        http.server.SimpleHTTPRequestHandler, directory=REMOTES_DIR
+        http.server.SimpleHTTPRequestHandler, directory=directory
     )
     httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{httpd.server_address[1]}"
     httpd.shutdown()
+    httpd.server_close()
+
+
+@pytest.fixture(scope="module")
+def remotes_server():
+    yield from _serve(REMOTES_DIR)
+
+
+@pytest.fixture(scope="module")
+def fixture_server(tmp_path_factory):
+    """Serves a temporary directory holding the suite's integer.json."""
+    root = tmp_path_factory.mktemp("remotes")
+    (root / "integer.json").write_text(json.dumps({"type": "integer"}))
+    yield from _serve(str(root))
 
 
 @pytest.mark.skipif(not suite_available(), reason="suite not vendored")
@@ -53,8 +69,8 @@ def test_suite_refremote_via_builtin_http(remotes_server):
     assert ran > 0
 
 
-def test_builtin_http_loader_fetches(remotes_server):
-    schema = {"$ref": f"{remotes_server}/integer.json"}
+def test_builtin_http_loader_fetches(fixture_server):
+    schema = {"$ref": f"{fixture_server}/integer.json"}
     compiled = Compiler().compile(schema)
     assert compiled.validate(3).valid
     assert not compiled.validate("x").valid
