@@ -20,9 +20,12 @@ JSON documents) is routed to the Arrow-batched evaluator UDF in
 ``jsonschema_spark.functions.udf`` — see SURVEY.md §4.2.
 
 The applicator layer (logical applicators, $ref / $dynamicRef, unevaluated*
-claims, summary rows, staging) and the array and map keywords are the planner
-core shared with the raw-JSON planner, ``plans.core``; this module holds the
-typed value model and the static lowering of StructType objects.
+claims, summary rows, staging), the value assertions and the array and map
+keywords are the planner core shared with the raw-JSON planner,
+``plans.core``. This module holds the typed value model, which answers the
+core's type, text, number, equality and multiple-of questions from the
+column's static type, the content vocabulary and the static lowering of
+StructType objects.
 """
 
 from __future__ import annotations
@@ -35,19 +38,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jsonschema_spark.formats import SPARK_REGEX_FORMATS
-from jsonschema_spark.json_values import fmt_num
+from jsonschema_spark.json_values import json_type
 from jsonschema_spark.plans.core import (
     VIOLATION_SCHEMA_DDL,
     PlanCompiler,
     Val,
     cond_violation,
     dec_scale,
-    divisor_fraction,
     double_multiple,
     empty_violations,
     escape_token,
+    is_in,
     joined_violation,
+    num_lit,
     num_text,
     safe,
     summary_violation,
@@ -85,12 +88,9 @@ def _decimal_multiple_plan(fdiv: Fraction, dt: T.DecimalType) -> str | None:
     return f"decimal({t_prec},{t_scale})"
 
 
-def _num_lit(v: Any) -> Column:
-    if isinstance(v, Fraction):
-        if v.denominator == 1:
-            return F.lit(int(v))
-        return F.lit(float(v))
-    return F.lit(v)
+def _family(type_name: str) -> str:
+    """The JSON type family equality compares within: integer is a number."""
+    return "number" if type_name == "integer" else type_name
 
 
 def _spark_type_name(dt: T.DataType) -> str:
@@ -205,25 +205,82 @@ class SparkPlanCompiler(PlanCompiler):
         dt = val.dtype.elementType if isinstance(val.dtype, T.ArrayType) else val.dtype.valueType
         return Val(col=col, dtype=dt, path=path, in_lambda=in_lambda)
 
-    def _compile_value(self, schema: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
-        def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            """cond applies only when the value is present."""
-            cond = safe(present & cond_violated)
-            parts.append(cond_violation(cond, val.path, keyword, code, params))
-            valids.append(~cond)
+    # value hooks (plans.core): the column's static type answers every type
+    # question at plan time
 
-        self._compile_assertions(schema, val, add, present)
+    def _is(self, val: Val, family: str) -> bool:
+        # a date / timestamp stands for a string in `type` and equality only:
+        # its Spark text is not its JSON serialization
+        if family == "string":
+            return isinstance(val.dtype, T.StringType)
+        return _is_number_type(val.dtype)
 
+    def _text(self, val: Val) -> Column:
+        return val.col
+
+    _number = _text
+
+    def _shown(self, val: Val) -> Column:
+        # a float/double's integral value prints without ".0", like the
+        # scalar core
+        if isinstance(val.dtype, (T.FloatType, T.DoubleType)):
+            return num_text(val.col, val.col.try_cast("decimal(38,0)"))
+        return val.col
+
+    def _type_check(self, val: Val, declared: list) -> tuple[Column | bool, Column] | None:
+        actual = _spark_type_name(val.dtype)
+        if actual in declared or (actual == "integer" and "number" in declared):
+            return None
+        if actual == "number" and "integer" in declared:
+            # dynamic integrality check on a float/double/decimal column
+            d = val.col.cast("double")
+            return d != F.floor(d).cast("double"), F.lit("number")
+        return True, F.lit(actual)  # statically wrong type
+
+    def _equals(self, val: Val, members: list) -> Column | bool:
+        # a member of a JSON type the column cannot hold never matches (a
+        # SQL NULL is absent, never a JSON null)
+        family = _family(_spark_type_name(val.dtype))
+        held = [m for m in members if m is not None and _family(json_type(m)) == family]
+        if not held:
+            return False
+        if family in ("array", "object"):
+            raise PlanCompileError("composite enum/const needs the UDF path (dynamic residue)")
+        return is_in(val.col, [num_lit(m) for m in held])
+
+    def _multiple(self, val: Val, fdiv: Fraction) -> Column | None:
+        dt = val.dtype
+        if _is_integer_type(dt) and fdiv.denominator == 1:
+            return (val.col % F.lit(int(fdiv))) == 0
+        cdt = _decimal_multiple_plan(fdiv, dt) if isinstance(dt, T.DecimalType) else None
+        if cdt is not None:
+            # decimal column: native remainder at a common exact scale. When
+            # the divisor's scale fits the column's, we stay at the column's
+            # own precision/scale (p<=18 keeps the Long-backed fast path;
+            # casting to decimal(38,12) forfeits it and costs ~7x
+            # steady-state — measured). A finer divisor bumps BOTH operands
+            # to scale=max(col, divisor) with a bounded precision bump, so
+            # 0.125 against decimal(10,2) is not rounded to 0.13 and 0.003 is
+            # not truncated to zero. If the bump would overflow precision 38
+            # (or the divisor never terminates), _decimal_multiple_plan
+            # returns None and we fall through to the scaled-double path.
+            sd_div = dec_scale(fdiv)
+            div_lit = F.lit(Decimal(int(fdiv * 10**sd_div)).scaleb(-sd_div))
+            return (val.col.cast(cdt) % div_lit.cast(cdt)) == F.lit(0).cast(cdt)
+        # float/double column, non-integer or mixed divisor
+        return double_multiple(val.col.cast("double"), fdiv)
+
+    def _compile_own(self, s: dict, val: Val, present: Column, add, parts: list, valids: list, depth: int) -> None:
         if (
             self.assert_content
             and isinstance(val.dtype, T.StringType)
-            and ("contentEncoding" in schema or "contentMediaType" in schema)
+            and ("contentEncoding" in s or "contentMediaType" in s)
         ):
-            self._compile_content(schema, val, add, parts, valids, present)
+            self._compile_content(s, val, add, parts, valids, present)
 
         # a struct's field set is static; arrays and maps lower in the core
         if isinstance(val.dtype, T.StructType):
-            self._compile_object(schema, val, parts, valids, present, depth)
+            self._compile_object(s, val, add, parts, valids, present, depth)
 
     # ---------------------------------------------------------------- content
 
@@ -272,168 +329,9 @@ class SparkPlanCompiler(PlanCompiler):
             )
             valids.append(~mismatch)
 
-    # -------------------------------------------------------------- assertions
-
-    def _compile_assertions(self, s: dict, val: Val, add, present: Column) -> None:
-        dt = val.dtype
-        # the value as params print it: a float/double's integral value
-        # without ".0", like the scalar core
-        shown = (
-            num_text(val.col, val.col.try_cast("decimal(38,0)"))
-            if isinstance(dt, (T.FloatType, T.DoubleType))
-            else val.col
-        )
-
-        if "type" in s:
-            declared = s["type"] if isinstance(s["type"], list) else [s["type"]]
-            actual = _spark_type_name(dt)
-            ok = actual in declared or (actual == "integer" and "number" in declared)
-            if not ok and not (actual == "number" and "integer" in declared):
-                # statically wrong type: every present value violates
-                add(
-                    F.lit(True),
-                    "type",
-                    "type_mismatch",
-                    {"received": F.lit(actual), "expected": F.lit(", ".join(map(str, declared)))},
-                )
-            elif actual == "number" and "integer" in declared and "number" not in declared:
-                # dynamic integrality check on a float/double/decimal column
-                add(
-                    val.col.cast("double") != F.floor(val.col.cast("double")).cast("double"),
-                    "type",
-                    "type_mismatch",
-                    {"received": F.lit("number"), "expected": F.lit("integer")},
-                )
-
-        if "enum" in s and isinstance(s["enum"], list):
-            allowed = s["enum"]
-            scalars = [a for a in allowed if isinstance(a, (str, int, float, bool)) or isinstance(a, Fraction)]
-            if len(scalars) == len(allowed):
-                lits = [_num_lit(a) if not isinstance(a, str) else F.lit(a) for a in allowed]
-                add(
-                    ~val.col.isin(*lits),
-                    "enum",
-                    "value_not_in_enum",
-                    {
-                        "received": shown.cast("string"),
-                        "expected": F.lit(", ".join(fmt_num(a) if not isinstance(a, str) else a for a in allowed)),
-                    },
-                )
-            else:
-                raise PlanCompileError("composite enum values need the UDF path (dynamic residue)")
-
-        if "const" in s:
-            cv = s["const"]
-            if cv is None:
-                add(present, "const", "const_mismatch_null")  # only null passes
-            elif isinstance(cv, (str, bool)):
-                add(val.col != F.lit(cv), "const", "const_mismatch")
-            elif isinstance(cv, (int, float, Fraction)):
-                add(val.col != _num_lit(cv), "const", "const_mismatch")
-            else:
-                raise PlanCompileError("composite const needs the UDF path (dynamic residue)")
-
-        if _is_number_type(dt):
-            for kw, code, op in (
-                ("minimum", "value_below_minimum", "lt"),
-                ("maximum", "value_above_maximum", "gt"),
-                ("exclusiveMinimum", "exclusive_minimum_mismatch", "le"),
-                ("exclusiveMaximum", "exclusive_maximum_mismatch", "ge"),
-            ):
-                if kw in s and isinstance(s[kw], (int, float, Fraction)) and not isinstance(s[kw], bool):
-                    bound = _num_lit(s[kw])
-                    cond = {
-                        "lt": val.col < bound,
-                        "gt": val.col > bound,
-                        "le": val.col <= bound,
-                        "ge": val.col >= bound,
-                    }[op]
-                    pkey = {
-                        "minimum": "minimum",
-                        "maximum": "maximum",
-                        "exclusiveMinimum": "exclusive_minimum",
-                        "exclusiveMaximum": "exclusive_maximum",
-                    }[kw]
-                    add(cond, kw, code, {"value": shown, pkey: F.lit(fmt_num(s[kw]))})
-            if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
-                div = s["multipleOf"]
-                fdiv = divisor_fraction(div)
-                if fdiv <= 0:
-                    add(F.lit(True), "multipleOf", "invalid_multiple_of", {"multiple_of": F.lit(fmt_num(div))})
-                elif _is_integer_type(dt) and fdiv.denominator == 1:
-                    add(
-                        (val.col % F.lit(int(fdiv))) != 0,
-                        "multipleOf",
-                        "not_multiple_of",
-                        {"multiple_of": F.lit(fmt_num(div))},
-                    )
-                elif isinstance(dt, T.DecimalType) and _decimal_multiple_plan(fdiv, dt) is not None:
-                    # decimal column: native remainder at a common exact
-                    # scale. When the divisor's scale fits the column's, we
-                    # stay at the column's own precision/scale (p<=18 keeps
-                    # the Long-backed fast path; casting to decimal(38,12)
-                    # forfeits it and costs ~7x steady-state — measured).
-                    # A finer divisor bumps BOTH operands to
-                    # scale=max(col, divisor) with a bounded precision bump,
-                    # so 0.125 against decimal(10,2) is not rounded to 0.13
-                    # and 0.003 is not truncated to zero. If the bump would
-                    # overflow precision 38 (or the divisor never
-                    # terminates), _decimal_multiple_plan returns None and
-                    # we fall through to the scaled-double path below.
-                    cdt = _decimal_multiple_plan(fdiv, dt)
-                    sd_div = dec_scale(fdiv)
-                    div_lit = F.lit(Decimal(int(fdiv * 10**sd_div)).scaleb(-sd_div))
-                    add(
-                        (val.col.cast(cdt) % div_lit.cast(cdt)) != F.lit(0).cast(cdt),
-                        "multipleOf",
-                        "not_multiple_of",
-                        {"multiple_of": F.lit(fmt_num(div))},
-                    )
-                else:
-                    # float/double column, non-integer or mixed divisor; a
-                    # non-terminating or oversized divisor has no exact
-                    # double multiple under decimal semantics
-                    is_mult = double_multiple(val.col.cast("double"), fdiv)
-                    add(
-                        present if is_mult is None else ~is_mult,
-                        "multipleOf", "not_multiple_of", {"multiple_of": F.lit(fmt_num(div))},
-                    )
-
-        if isinstance(dt, T.StringType):
-            if "minLength" in s:
-                n = int(s["minLength"])
-                add(
-                    F.length(val.col) < n,
-                    "minLength",
-                    "string_too_short",
-                    {"min_length": F.lit(n), "length": F.length(val.col)},
-                )
-            if "maxLength" in s:
-                n = int(s["maxLength"])
-                add(
-                    F.length(val.col) > n,
-                    "maxLength",
-                    "string_too_long",
-                    {"max_length": F.lit(n), "length": F.length(val.col)},
-                )
-            if "pattern" in s and isinstance(s["pattern"], str):
-                # Java regex via rlike; plan compiler validated syntax upstream
-                add(
-                    ~val.col.rlike(s["pattern"]),
-                    "pattern",
-                    "pattern_mismatch",
-                    {"pattern": F.lit(s["pattern"])},
-                )
-            if "format" in s and isinstance(s["format"], str) and self.assert_format:
-                fmt = s["format"]
-                rx = SPARK_REGEX_FORMATS.get(fmt)
-                if rx is not None:
-                    add(~val.col.rlike(rx), "format", "format_mismatch", {"format": F.lit(fmt)})
-                # non-regex formats are UDF residue — handled by functions.udf
-
     # ----------------------------------------------------------------- objects
 
-    def _compile_object(self, s: dict, val: Val, parts, valids, present: Column, depth: int) -> None:
+    def _compile_object(self, s: dict, val: Val, add, parts, valids, present: Column, depth: int) -> None:
         dt: T.StructType = val.dtype  # type: ignore[assignment]
         fields = {f.name: f for f in dt.fields}
 
@@ -486,18 +384,10 @@ class SparkPlanCompiler(PlanCompiler):
             cnt = cnt if cnt is not None else F.lit(0)
             if "minProperties" in s:
                 n = int(s["minProperties"])
-                cond = safe(present & (cnt < n))
-                parts.append(
-                    cond_violation(cond, val.path, "minProperties", "too_few_properties", {"min_properties": F.lit(n)})
-                )
-                valids.append(~cond)
+                add(cnt < n, "minProperties", "too_few_properties", {"min_properties": F.lit(n)})
             if "maxProperties" in s:
                 n = int(s["maxProperties"])
-                cond = safe(present & (cnt > n))
-                parts.append(
-                    cond_violation(cond, val.path, "maxProperties", "too_many_properties", {"max_properties": F.lit(n)})
-                )
-                valids.append(~cond)
+                add(cnt > n, "maxProperties", "too_many_properties", {"max_properties": F.lit(n)})
 
         if "properties" in s and isinstance(s["properties"], dict):
             prop_conds: list[tuple[Column, Any]] = []

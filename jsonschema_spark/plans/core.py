@@ -12,17 +12,22 @@ how the value under validation is represented:
 - ``$ref`` / ``$dynamicRef`` with a statically tracked dynamic scope;
 - the logical applicators (allOf, anyOf, oneOf, not, if/then/else,
   dependentSchemas);
+- the value assertions (type, enum, const, the numeric bounds, multipleOf,
+  minLength / maxLength / pattern / format), for a planner's values and for
+  propertyNames keys alike;
 - the array keywords, and the object keywords over runtime-enumerated keys
   (a typed ``MapType`` column, a raw-JSON object);
 - the annotation-flow walk that decides which properties / items an
   ``unevaluated*`` keyword still sees.
 
 Subclasses keep only their value model: how a value is typed
-(:meth:`PlanCompiler._typed`), which assertions apply to it
-(:meth:`PlanCompiler._compile_value`), whether it has a property
-(:meth:`PlanCompiler._has`), and how it is reached as an array or a keyed
-object and how its children are (the collection hooks). Both planners read
-SQL NULL as an absent value.
+(:meth:`PlanCompiler._typed`); what the value assertions ask of it, which is
+its JSON type family, its text, number and printed forms, the ``type``
+check, member equality and the multiple-of predicate (the value hooks);
+whether it has a property (:meth:`PlanCompiler._has`); how it is reached as
+an array or a keyed object and how its children are (the collection hooks);
+and keywords only it lowers (:meth:`PlanCompiler._compile_own`). Both
+planners read SQL NULL as an absent value.
 """
 
 from __future__ import annotations
@@ -39,10 +44,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_spark.formats import SPARK_REGEX_FORMATS
+from jsonschema_spark.json_values import fmt_num
 from jsonschema_spark.registry import Registry
 
 __all__ = [
     "PlanCompiler",
+    "VALUE_KEYWORDS",
     "VIOLATION_SCHEMA_DDL",
     "Node",
     "Val",
@@ -54,9 +61,11 @@ __all__ = [
     "element_summary",
     "empty_violations",
     "escape_token",
+    "is_in",
     "joined_violation",
     "list_summary",
     "mk_violation",
+    "num_lit",
     "num_text",
     "safe",
     "summary_violation",
@@ -73,12 +82,23 @@ _EMPTY_VIOLATIONS = f"CAST(array() AS {VIOLATION_SCHEMA_DDL})"
 # attaching stages via a single select would silently miscompute otherwise
 _STAGE_IDS = count()
 
-# propertyNames subschemas evaluate against the key STRING; only these
-# keywords are expressible as plain string-column predicates
-_NAME_SCHEMA_KEYWORDS = {
-    "type", "pattern", "minLength", "maxLength", "enum", "const", "format",
-    "title", "description", "$comment",
-}
+# (keyword, code, param, violated) for the numeric bounds
+_BOUNDS = (
+    ("minimum", "value_below_minimum", "minimum", operator.lt),
+    ("maximum", "value_above_maximum", "maximum", operator.gt),
+    ("exclusiveMinimum", "exclusive_minimum_mismatch", "exclusive_minimum", operator.le),
+    ("exclusiveMaximum", "exclusive_maximum_mismatch", "exclusive_maximum", operator.ge),
+)
+
+_STRING_KEYWORDS = ("minLength", "maxLength", "pattern", "format")
+
+_NUMBER_KEYWORDS = ("multipleOf", *(b[0] for b in _BOUNDS))
+
+VALUE_KEYWORDS = ("type", "enum", "const", *_NUMBER_KEYWORDS, *_STRING_KEYWORDS)
+
+# propertyNames subschemas evaluate against the key STRING; only the value
+# assertions are expressible as plain string-column predicates
+_NAME_SCHEMA_KEYWORDS = {*VALUE_KEYWORDS, "title", "description", "$comment"}
 
 # object keywords that need the key set enumerated at runtime
 _KEYED_KEYWORDS = (
@@ -203,6 +223,22 @@ def double_multiple(x: Column, fdiv: Fraction) -> Column | None:
     )
     approx = F.pmod(w, F.lit(float(m))) == 0.0
     return F.when(small, exact).otherwise(approx)
+
+
+def num_lit(v: Any) -> Column:
+    """A JSON number (or boolean) as a literal: integral values stay integral."""
+    if isinstance(v, Fraction):
+        return F.lit(int(v)) if v.denominator == 1 else F.lit(float(v))
+    return F.lit(v)
+
+
+def is_in(col: Column, lits: list[Column]) -> Column:
+    """``col`` equals one of ``lits`` (at least one)."""
+    return col == lits[0] if len(lits) == 1 else col.isin(*lits)
+
+
+def _is_number(x: Any) -> bool:
+    return isinstance(x, (int, float, Fraction)) and not isinstance(x, bool)
 
 
 # --------------------------------------------------------- summary idioms
@@ -335,6 +371,28 @@ class Claim:
         return bool(self.names or self.patterns or self.prefix or self.contains or self.every)
 
 
+class _StringKey:
+    """The value hooks of :class:`PlanCompiler` for a propertyNames key."""
+
+    def _is(self, val: Val, family: str) -> bool:
+        return family == "string"
+
+    def _text(self, val: Val) -> Column:
+        return val.col
+
+    _shown = _text
+
+    def _type_check(self, val: Val, declared: list) -> tuple[Column | bool, Column] | None:
+        return None if "string" in declared else (True, F.lit("string"))
+
+    def _equals(self, val: Val, members: list) -> Column | bool:
+        lits = [F.lit(m) for m in members if isinstance(m, str)]
+        return is_in(val.col, lits) if lits else False
+
+
+_KEY = _StringKey()
+
+
 def _collect(sub: dict, claim: Claim, kind: str, root: bool) -> None:
     """Add the claims ``sub`` makes itself (kind "Properties" or "Items")."""
     if kind == "Properties":
@@ -460,7 +518,9 @@ class PlanCompiler:
                 valids.append(sub.valid)
         val = self._typed(val)
         present = val.col.isNotNull()
-        self._compile_value(s, val, present, parts, valids, depth)
+        add = self._adder(present, val.path, parts, valids)
+        self._compile_assertions(s, val, self, add)
+        self._compile_own(s, val, present, add, parts, valids, depth)
         self._compile_keyed(s, val, present, parts, valids, depth)
         self._compile_array(s, val, present, parts, valids, depth)
         self._compile_logical(s, val, present, parts, valids, depth)
@@ -484,6 +544,81 @@ class PlanCompiler:
             valid = valid & c
         return Node(valid, concat_violations(parts))
 
+    @staticmethod
+    def _adder(gate: Column | bool, path: Column | None, parts: list | None, valids: list):
+        """``add(cond, keyword, code, params)``: one violation row at ``path``
+        when ``gate`` and ``cond`` (a Column or a plan-time True) hold. A
+        predicate-only caller passes ``parts`` None and gets validity only."""
+
+        def add(cond: Column | bool, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
+            cond = F.lit(True) if cond is True else cond
+            cond = safe(cond if gate is True else gate & cond)
+            if parts is not None:
+                parts.append(cond_violation(cond, path, keyword, code, params))
+            valids.append(~cond)
+
+        return add
+
+    # ------------------------------------------------------- value assertions
+
+    def _compile_assertions(self, s: dict, val: Val, model: Any, add) -> None:
+        """The value assertions over ``val``; ``model`` answers the value
+        hooks (the planner itself, or :data:`_KEY` for a propertyNames key).
+        Each derived form is asked for only when a present keyword needs it."""
+        if "type" in s:
+            declared = s["type"] if isinstance(s["type"], list) else [s["type"]]
+            mismatch = model._type_check(val, declared)
+            if mismatch is not None:
+                add(mismatch[0], "type", "type_mismatch",
+                    {"received": mismatch[1], "expected": F.lit(", ".join(map(str, declared)))})
+
+        if isinstance(s.get("enum"), list):
+            ok = model._equals(val, s["enum"])
+            expected = ", ".join(x if isinstance(x, str) else fmt_num(x) for x in s["enum"])
+            add(True if ok is False else ~ok, "enum", "value_not_in_enum",
+                {"received": model._shown(val).cast("string"), "expected": F.lit(expected)})
+
+        if "const" in s:
+            ok = model._equals(val, [s["const"]])
+            add(True if ok is False else ~ok, "const",
+                "const_mismatch_null" if s["const"] is None else "const_mismatch")
+
+        # each family's keywords need its test only to be skipped at plan
+        # time or to gate invalid_multiple_of: text and number are NULL on a
+        # value of another type, so their checks pass there
+        is_num = any(_is_number(s.get(kw)) for kw in _NUMBER_KEYWORDS) and model._is(val, "number")
+        if is_num is not False:
+            for kw, code, pkey, violated in _BOUNDS:
+                if _is_number(s.get(kw)):
+                    add(violated(model._number(val), num_lit(s[kw])), kw, code,
+                        {"value": model._shown(val), pkey: F.lit(fmt_num(s[kw]))})
+            if _is_number(s.get("multipleOf")):
+                div = s["multipleOf"]
+                fdiv = divisor_fraction(div)
+                is_mult = model._multiple(val, fdiv) if fdiv > 0 else None
+                add(is_num if is_mult is None else ~is_mult, "multipleOf",
+                    "not_multiple_of" if fdiv > 0 else "invalid_multiple_of", {"multiple_of": F.lit(fmt_num(div))})
+
+        is_str = any(kw in s for kw in _STRING_KEYWORDS) and model._is(val, "string")
+        if is_str is not False:
+            for kw, code, pkey, violated in (
+                ("minLength", "string_too_short", "min_length", operator.lt),
+                ("maxLength", "string_too_long", "max_length", operator.gt),
+            ):
+                if kw in s:
+                    n = int(s[kw])
+                    length = F.length(model._text(val))
+                    add(violated(length, n), kw, code, {pkey: F.lit(n), "length": length})
+            if isinstance(s.get("pattern"), str):
+                # Java regex via rlike; the compiler validated its syntax
+                add(~model._text(val).rlike(s["pattern"]), "pattern", "pattern_mismatch",
+                    {"pattern": F.lit(s["pattern"])})
+            if isinstance(s.get("format"), str) and self.assert_format:
+                # non-regex formats are UDF residue (functions.udf)
+                rx = SPARK_REGEX_FORMATS.get(s["format"])
+                if rx is not None:
+                    add(~model._text(val).rlike(rx), "format", "format_mismatch", {"format": F.lit(s["format"])})
+
     # --------------------------------------------------- value-model hooks
 
     def _compile_ref(self, target: Any, val: Val, depth: int) -> Node:
@@ -501,11 +636,42 @@ class PlanCompiler:
             cond_violation(val.col.isNotNull(), val.path, "schema", "false_schema_mismatch"),
         )
 
-    def _compile_value(self, s: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
-        raise NotImplementedError
+    def _compile_own(self, s: dict, val: Val, present: Column, add, parts: list, valids: list, depth: int) -> None:
+        """Keywords only this value model lowers."""
 
     def _has(self, val: Val, name: str) -> Column | None:
         """Runtime 'value has property ``name``', or None when it never can."""
+        raise NotImplementedError
+
+    # ------------------------------------------------------ value hooks
+
+    def _is(self, val: Val, family: str) -> Column | bool:
+        """'The value is a JSON ``family``' ("string" or "number"): a
+        plan-time bool or a runtime Column."""
+        raise NotImplementedError
+
+    def _text(self, val: Val) -> Column:
+        """The value as a string; NULL where it is not one."""
+        raise NotImplementedError
+
+    def _number(self, val: Val) -> Column:
+        """The value as a number; NULL where it is not one."""
+        raise NotImplementedError
+
+    def _shown(self, val: Val) -> Column:
+        """The value as the scalar core prints it in params."""
+        raise NotImplementedError
+
+    def _type_check(self, val: Val, declared: list) -> tuple[Column | bool, Column] | None:
+        """(violated, received type name) of ``type: declared``, or None."""
+        raise NotImplementedError
+
+    def _equals(self, val: Val, members: list) -> Column | bool:
+        """'The value is JSON-equal to a member' (a bool is no number)."""
+        raise NotImplementedError
+
+    def _multiple(self, val: Val, fdiv: Fraction) -> Column | None:
+        """'The number is a multiple of ``fdiv`` > 0', None if none is."""
         raise NotImplementedError
 
     # ------------------------------------------------ collection value model
@@ -553,11 +719,7 @@ class PlanCompiler:
         arr, gate = got
         n = F.size(arr)
         step = depth + self.STEP
-
-        def add(cond: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = safe(gate & cond)
-            parts.append(cond_violation(cond, val.path, keyword, code, params))
-            valids.append(~cond)
+        add = self._adder(gate, val.path, parts, valids)
 
         def elem(x: Column, i: Column) -> Val:
             return self._member(val, x, F.concat(val.path, F.lit("/"), i.cast("string")), True)
@@ -733,15 +895,14 @@ class PlanCompiler:
             """The keys of ``ks`` whose violations array in ``pv`` is non-empty."""
             return F.filter(F.zip_with(ks, pv, lambda k, a: F.when(F.size(a) > 0, k)), lambda x: x.isNotNull())
 
+        add = self._adder(obj, path, parts, valids)
         for kw, code, pkey, op in (
             ("minProperties", "too_few_properties", "min_properties", operator.lt),
             ("maxProperties", "too_many_properties", "max_properties", operator.gt),
         ):
             if kw in s:
                 k = int(s[kw])
-                cond = safe(obj & op(F.size(keys), k))
-                parts.append(cond_violation(cond, path, kw, code, {pkey: F.lit(k)}))
-                valids.append(~cond)
+                add(op(F.size(keys), k), kw, code, {pkey: F.lit(k)})
 
         if isinstance(s.get("propertyNames"), (dict, bool)):
             name_ok = self._key_predicate(s["propertyNames"])
@@ -819,8 +980,9 @@ class PlanCompiler:
                 )
 
     def _key_predicate(self, sub: Any):
-        """A propertyNames subschema as a predicate over the key string;
-        keywords no string predicate expresses raise ``error``."""
+        """A propertyNames subschema as a predicate over the key string: the
+        value assertions with the key as a string value; keywords no string
+        predicate expresses raise ``error``."""
         if sub is True or sub == {}:
             return lambda k: F.lit(True)
         if sub is False:
@@ -830,27 +992,9 @@ class PlanCompiler:
             raise self.error(f"propertyNames keywords {sorted(bad)} need the UDF path")
 
         def pred(k: Column) -> Column:
-            ok = F.lit(True)
-            t = sub.get("type")
-            if t is not None and t != "string" and t != ["string"]:
-                # keys are always strings; any other required type never matches
-                ok = ok & F.lit("string" in t if isinstance(t, list) else False)
-            if isinstance(sub.get("pattern"), str):
-                ok = ok & safe(k.rlike(sub["pattern"]))
-            if "minLength" in sub:
-                ok = ok & (F.length(k) >= int(sub["minLength"]))
-            if "maxLength" in sub:
-                ok = ok & (F.length(k) <= int(sub["maxLength"]))
-            if isinstance(sub.get("enum"), list):
-                opts = [x for x in sub["enum"] if isinstance(x, str)]
-                ok = ok & (k.isin(*opts) if opts else F.lit(False))
-            if "const" in sub:
-                ok = ok & (k == F.lit(sub["const"]) if isinstance(sub["const"], str) else F.lit(False))
-            if isinstance(sub.get("format"), str) and self.assert_format:
-                rx = SPARK_REGEX_FORMATS.get(sub["format"])
-                if rx is not None:
-                    ok = ok & safe(k.rlike(rx))
-            return ok
+            oks: list[Column] = []
+            self._compile_assertions(sub, Val(k, F.lit("")), _KEY, self._adder(True, None, None, oks))
+            return reduce(operator.and_, oks, F.lit(True))
 
         return pred
 

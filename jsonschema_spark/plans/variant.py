@@ -7,9 +7,11 @@ the same JSON Schema semantics onto `try_parse_json` variants: typing via
 SQL NULL => absent), traversal via `try_variant_get`, arrays via
 `cast to array<variant>` + higher-order functions, object keys via
 `cast to map<string,variant>`. Zero Python per row. The applicator layer
-(logical applicators, $ref / $dynamicRef, unevaluated* claims, summary rows)
-and the array and object keywords are the shared planner core in plans.core;
-this module holds the variant value model.
+(logical applicators, $ref / $dynamicRef, unevaluated* claims, summary rows),
+the value assertions and the array and object keywords are the shared
+planner core in plans.core; this module holds the variant value model, which
+answers the core's type, text, number, equality and multiple-of questions at
+runtime from the staged `schema_of_variant` string.
 
 functions.udf falls back to the Arrow-batched scalar-evaluator UDF only for
 the residue: keywords outside `_SUPPORTED` (content vocabulary, legacy
@@ -33,33 +35,31 @@ Documented divergences (same contract as SURVEY §4.2.6):
 
 from __future__ import annotations
 
+import json
 from fractions import Fraction
+from functools import cached_property, reduce
+from operator import attrgetter, or_
 from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from jsonschema_spark.formats import SPARK_REGEX_FORMATS
-from jsonschema_spark.json_values import fmt_num
 from jsonschema_spark.plans.core import (
+    VALUE_KEYWORDS,
     Node,
     PlanCompiler,
     Val,
     cond_violation,
-    divisor_fraction,
     double_multiple,
     empty_violations,
     num_text,
-    safe,
 )
 
 __all__ = ["VariantPlanCompiler", "VariantCompileError", "validate_variant_column"]
 
 # keywords the variant path supports; anything else => fall back to UDF path
 _SUPPORTED = {
-    "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
-    "exclusiveMaximum", "multipleOf", "minLength", "maxLength", "pattern",
-    "format", "required", "properties", "items", "prefixItems", "minItems",
+    *VALUE_KEYWORDS, "required", "properties", "items", "prefixItems", "minItems",
     "maxItems", "uniqueItems", "contains", "minContains", "maxContains",
     "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
     "dependentRequired", "dependentSchemas", "$ref", "$defs", "definitions",
@@ -73,43 +73,57 @@ _SUPPORTED = {
     "unevaluatedItems",
 }
 
-_BOUNDS = (
-    ("minimum", "value_below_minimum", "minimum", lambda x, b: x < b),
-    ("maximum", "value_above_maximum", "maximum", lambda x, b: x > b),
-    ("exclusiveMinimum", "exclusive_minimum_mismatch", "exclusive_minimum", lambda x, b: x <= b),
-    ("exclusiveMaximum", "exclusive_maximum_mismatch", "exclusive_maximum", lambda x, b: x >= b),
-)
-
 
 class VariantCompileError(ValueError):
     pass
 
 
-def _is_number_t(t: Column) -> Column:
-    return (t == "BIGINT") | (t == "DOUBLE") | (t == "FLOAT") | t.startswith("DECIMAL")
+class _Variant(Val):
+    """A variant value whose ``dtype`` is its staged `schema_of_variant`
+    string. Each derived form is built on first use, once per subschema
+    visit, and only when a keyword asks for it."""
 
+    @cached_property
+    def is_number(self) -> Column:
+        t = self.dtype
+        return (t == "BIGINT") | (t == "DOUBLE") | (t == "FLOAT") | t.startswith("DECIMAL")
 
-def _is_integer_t(t: Column, v: Column) -> Column:
-    d = F.try_variant_get(v, "$", "double")
-    return (
-        (t == "BIGINT")
-        | (t.rlike(r"^DECIMAL\(\d+,0\)$"))
-        | (((t == "DOUBLE") | (t == "FLOAT") | t.startswith("DECIMAL")) & (d == F.floor(d)))
-    )
+    @cached_property
+    def is_string(self) -> Column:
+        return self.dtype == "STRING"
 
+    @cached_property
+    def number(self) -> Column:
+        return F.try_variant_get(self.col, "$", "double")
 
-def _json_type(t: Column, v: Column) -> Column:
-    """JSON type name of a variant (reference: utils.go getDataType)."""
-    return (
-        F.when(t == "VOID", "null")
-        .when(t == "STRING", "string")
-        .when(t == "BOOLEAN", "boolean")
-        .when(t.startswith("ARRAY"), "array")
-        .when(t.startswith("OBJECT") | (t == "STRUCT"), "object")
-        .when(_is_integer_t(t, v), "integer")
-        .when(_is_number_t(t), "number")
-        .otherwise("unknown")
-    )
+    @cached_property
+    def text(self) -> Column:
+        return F.when(self.is_string, F.try_variant_get(self.col, "$", "string"))
+
+    @cached_property
+    def json_type(self) -> Column:
+        """JSON type name (reference: utils.go getDataType)."""
+        t, d = self.dtype, self.number
+        return (
+            F.when(t == "VOID", "null")
+            .when(self.is_string, "string")
+            .when(t == "BOOLEAN", "boolean")
+            .when(t.startswith("ARRAY"), "array")
+            .when(t.startswith("OBJECT") | (t == "STRUCT"), "object")
+            .when(self.is_number & (d == F.floor(d)), "integer")
+            .when(self.is_number, "number")
+            .otherwise("unknown")
+        )
+
+    @cached_property
+    def shown(self) -> Column:
+        jt = self.json_type
+        return (
+            F.when(jt == "string", self.text)
+            .when(jt.isin("integer", "number"), num_text(self.number, F.try_variant_get(self.col, "$", "decimal(38,0)")))
+            .when(jt == "boolean", F.try_variant_get(self.col, "$", "string"))
+            .otherwise(jt)
+        )
 
 
 class VariantPlanCompiler(PlanCompiler):
@@ -204,7 +218,7 @@ class VariantPlanCompiler(PlanCompiler):
         # schema_of_variant / try_variant_get otherwise re-run per keyword
         # reference (no CSE inside one projection — measured)
         v = self._maybe_stage(val.col, val)
-        return Val(v, val.path, self._maybe_stage(F.schema_of_variant(v), val), val.in_lambda)
+        return _Variant(v, val.path, self._maybe_stage(F.schema_of_variant(v), val), val.in_lambda)
 
     def _node(self, present: Column, parts: list, valids: list) -> Node:
         # SQL NULL == absent (valid, no rows); VOID == JSON null
@@ -247,93 +261,41 @@ class VariantPlanCompiler(PlanCompiler):
         # canonical JSON text: variant normalizes number forms (2.0 -> 2)
         return F.transform(arr, lambda x: F.to_json(x))
 
-    def _compile_value(self, s: dict, val: Val, present: Column, parts: list, valids: list, depth: int) -> None:
-        def add(cond_violated: Column, keyword: str, code: str, params: dict[str, Column] | None = None) -> None:
-            cond = present & safe(cond_violated)
-            parts.append(cond_violation(cond, val.path, keyword, code, params))
-            valids.append(~cond)
+    # value hooks (plans.core): answered at runtime from the staged type
 
-        self._assertions(s, val.col, val.dtype, add)
+    def _is(self, val: _Variant, family: str) -> Column:
+        return val.is_string if family == "string" else val.is_number
 
-    # ------------------------------------------------------------- assertions
+    _text = staticmethod(attrgetter("text"))
+    _shown = staticmethod(attrgetter("shown"))
 
-    def _assertions(self, s: dict, v: Column, t: Column, add) -> None:
-        jt = _json_type(t, v)
-        num = F.try_variant_get(v, "$", "double")
-        text = F.when(t == "STRING", F.try_variant_get(v, "$", "string"))
+    def _number(self, val: _Variant) -> Column:
+        # a numeric string casts to a double too: NULL it
+        return F.when(val.is_number, val.number)
 
-        if "type" in s:
-            declared = s["type"] if isinstance(s["type"], list) else [s["type"]]
-            ok = jt.isin(*declared)
-            if "number" in declared:
-                ok = ok | (jt == "integer")
-            add(~ok, "type", "type_mismatch",
-                {"received": jt, "expected": F.lit(", ".join(map(str, declared)))})
+    def _type_check(self, val: _Variant, declared: list) -> tuple[Column, Column]:
+        names = [*declared, "integer"] if "number" in declared else declared
+        return ~val.json_type.isin(*names), val.json_type
 
-        if "enum" in s and isinstance(s["enum"], list):
-            ok = F.lit(False)
-            for item in s["enum"]:
-                ok = ok | self._eq_const(v, t, num, text, item)
-            # received / expected as the scalar core prints them
-            received = (
-                F.when(jt == "string", text)
-                .when(jt.isin("integer", "number"), num_text(num, F.try_variant_get(v, "$", "decimal(38,0)")))
-                .when(jt == "boolean", F.try_variant_get(v, "$", "string"))
-                .otherwise(jt)
-            )
-            expected = ", ".join(x if isinstance(x, str) else fmt_num(x) for x in s["enum"])
-            add(~ok, "enum", "value_not_in_enum", {"received": received, "expected": F.lit(expected)})
+    def _equals(self, val: _Variant, members: list) -> Column | bool:
+        def eq(item: Any) -> Column:
+            t = val.dtype
+            if item is None:
+                return t == "VOID"
+            if isinstance(item, bool):
+                return (t == "BOOLEAN") & (F.try_variant_get(val.col, "$", "boolean") == F.lit(item))
+            if isinstance(item, (int, float, Fraction)):
+                return val.is_number & (val.number == F.lit(float(item)))
+            if isinstance(item, str):
+                return val.is_string & (val.text == F.lit(item))
+            # composite member: canonical JSON comparison
+            return F.to_json(val.col) == F.lit(json.dumps(item, separators=(",", ":"), sort_keys=True))
 
-        if "const" in s:
-            code = "const_mismatch_null" if s["const"] is None else "const_mismatch"
-            add(~self._eq_const(v, t, num, text, s["const"]), "const", code)
+        return reduce(or_, map(eq, members)) if members else False
 
-        for kw, code, pkey, mk in _BOUNDS:
-            if kw in s and isinstance(s[kw], (int, float, Fraction)) and not isinstance(s[kw], bool):
-                add(_is_number_t(t) & mk(num, F.lit(float(s[kw]))), kw, code,
-                    {"value": num_text(num, F.try_variant_get(v, "$", "decimal(38,0)")), pkey: F.lit(fmt_num(s[kw]))})
+    def _multiple(self, val: _Variant, fdiv: Fraction) -> Column:
+        return double_multiple(self._number(val), fdiv)
 
-        if "multipleOf" in s and isinstance(s["multipleOf"], (int, float, Fraction)) and not isinstance(s["multipleOf"], bool):
-            div = s["multipleOf"]
-            fdiv = divisor_fraction(div)
-            param = {"multiple_of": F.lit(fmt_num(div))}
-            if fdiv <= 0:
-                add(F.lit(True), "multipleOf", "invalid_multiple_of", param)
-            else:
-                is_mult = double_multiple(num, fdiv)
-                cond = _is_number_t(t) if is_mult is None else _is_number_t(t) & ~is_mult
-                add(cond, "multipleOf", "not_multiple_of", param)
-
-        if "minLength" in s:
-            n = int(s["minLength"])
-            add((t == "STRING") & (F.length(text) < n), "minLength", "string_too_short",
-                {"min_length": F.lit(n), "length": F.length(text)})
-        if "maxLength" in s:
-            n = int(s["maxLength"])
-            add((t == "STRING") & (F.length(text) > n), "maxLength", "string_too_long",
-                {"max_length": F.lit(n), "length": F.length(text)})
-        if "pattern" in s and isinstance(s["pattern"], str):
-            add((t == "STRING") & ~text.rlike(s["pattern"]), "pattern", "pattern_mismatch",
-                {"pattern": F.lit(s["pattern"])})
-        if "format" in s and isinstance(s["format"], str) and self.assert_format:
-            rx = SPARK_REGEX_FORMATS.get(s["format"])
-            if rx is not None:
-                add((t == "STRING") & ~text.rlike(rx), "format", "format_mismatch",
-                    {"format": F.lit(s["format"])})
-
-    def _eq_const(self, v: Column, t: Column, num: Column, text: Column, item: Any) -> Column:
-        if item is None:
-            return t == "VOID"
-        if isinstance(item, bool):
-            return (t == "BOOLEAN") & (F.try_variant_get(v, "$", "boolean") == F.lit(item))
-        if isinstance(item, (int, float, Fraction)):
-            return _is_number_t(t) & (num == F.lit(float(item)))
-        if isinstance(item, str):
-            return (t == "STRING") & (text == F.lit(item))
-        # composite const/enum: canonical JSON comparison
-        import json as _json
-
-        return F.to_json(v) == F.lit(_json.dumps(item, separators=(",", ":"), sort_keys=True))
 
 _PLAN_CACHE: dict = {}
 _PLAN_CACHE_MAX = 32
@@ -351,11 +313,9 @@ def _compiled_variant_plan(df, schema: Any, assert_format: bool, max_unroll: int
     applicationId so a restarted JVM never sees stale JVM object handles;
     compile FAILURES (VariantCompileError → UDF residue) are not cached.
     """
-    import json as _json
-
     key = (
         df.sparkSession.sparkContext.applicationId,
-        _json.dumps(schema, sort_keys=True, default=str),
+        json.dumps(schema, sort_keys=True, default=str),
         assert_format,
         max_unroll,
     )

@@ -65,6 +65,14 @@ CASES = [
     },
     # two matching branches: one_of_multiple_matches lists both indexes
     {"oneOf": [{"required": ["x_code"]}, {"required": ["count"]}]},
+    # enum / const members of a JSON type the column cannot hold never match
+    # (a bool is not a number); explicit ids keep the ids above unchanged
+    pytest.param({"properties": {"count": {"const": "5"}}}, id="count-const-string"),
+    pytest.param({"properties": {"x_code": {"enum": ["a1", 7]}}}, id="x_code-enum-mixed"),
+    pytest.param({"properties": {"count": {"enum": [True, 5]}}}, id="count-enum-bool"),
+    pytest.param({"properties": {"x_code": {"pattern": "^a[0-9]$"}}}, id="x_code-pattern"),
+    pytest.param({"properties": {"x_code": {"maxLength": 2}}}, id="x_code-maxLength"),
+    pytest.param({"properties": {"x_code": {"const": "a1"}}}, id="x_code-const"),
 ]
 
 
@@ -83,6 +91,15 @@ COLLECTION_CASES = [
     {"properties": {"tags": {"uniqueItems": True}}},
     {"properties": {"score": {"maximum": 2}}},
     {"properties": {"score": {"enum": [1, 2]}}},
+    {"properties": {"score": {"multipleOf": 0.5}}},
+    {"properties": {"score": {"type": "integer"}}},
+    {"properties": {"score": {"exclusiveMinimum": 2}}},
+    {"properties": {"score": {"const": 2}}},
+    # propertyNames key predicates come from the shared value assertions
+    {"properties": {"m": {"propertyNames": {"enum": ["a", "b", 1]}}}},
+    {"properties": {"m": {"propertyNames": {"type": "integer"}}}},
+    {"properties": {"m": {"propertyNames": {"const": "a"}}}},
+    {"properties": {"m": {"propertyNames": {"pattern": "^[a-z]", "minLength": 2}}}},
 ]
 
 

@@ -105,6 +105,18 @@ SCHEMAS = [
     {"enum": ["a", 1, None, True]},
     {"multipleOf": 2},
     {"uniqueItems": True},
+    # --- value assertions and propertyNames key predicates (one lowering) ---
+    {"const": "plain string"},
+    {"const": 7},
+    {"const": {"a": 1}},
+    {"maxLength": 5, "pattern": "^p"},
+    {"type": ["integer", "null"]},
+    {"multipleOf": 0.5},
+    {"multipleOf": 0},
+    {"propertyNames": {"enum": ["a", "b", 1]}},
+    {"propertyNames": {"type": "integer"}},
+    {"propertyNames": {"const": "a"}},
+    {"propertyNames": {"pattern": "^[a-z]", "minLength": 2}},
 ]
 
 INSTANCES = [
